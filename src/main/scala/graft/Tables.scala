@@ -9,10 +9,17 @@ import org.apache.spark.sql.types._
   * All operators read through here so that column pruning / predicate
   * pushdown always start from a plain parquet scan (Catalyst pushes
   * the operator's own `select`/`filter` into the scan).
+  *
+  * Reads go through [[graft.sources.Formats.readParquet]], which infers
+  * a table's schema once per file fingerprint and session conf: a
+  * query build re-reading an unchanged table lists its files but runs
+  * no schema-inference job, and a regenerated table (new files, new
+  * lengths or modification times) or a changed parquet conf is
+  * re-inferred on its next read.
   */
 object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Formats.readParquet(spark, s"$dir/$name.parquet")
 
   /** Every operator assumes `events.ts` is Long nanoseconds since the
     * epoch, but the generator is free to encode the column as parquet

@@ -1,12 +1,17 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface of the engine: every format a pipeline moving
   * 100 TB in and out needs, with the options that matter at scale
-  * pinned (explicit schemas — no sampling-based inference on huge
-  * inputs; compression; partitioned layout).
+  * pinned (explicit schemas for the text formats — no sampling-based
+  * inference on huge inputs; parquet's footer schema resolved once per
+  * file fingerprint; compression; partitioned layout).
   *
   * The reference's only IO is Kafka+JSON strings
   * (EventProcessorJob.kt:57-76); this generalizes to the batch
@@ -14,9 +19,58 @@ import org.apache.spark.sql.types.StructType
   */
 object Formats {
 
-  /** Schema-first readers: never infer on large inputs. */
+  /** What a parquet path's schema was inferred from: the sorted
+    * (path, length, modification time) of every leaf file under it,
+    * and the session conf (the parquet inference confs — nanosAsLong,
+    * binaryAsString, inferTimestampNTZ, mergeSchema — change the
+    * answer).
+    */
+  private final case class Resolved(schema: StructType,
+      files: Seq[(String, Long, Long)], conf: Map[String, String])
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  /** The one parquet read path. Spark infers a parquet schema by
+    * running a footer-reading job, even for one file; a query build
+    * that reads the same unchanged table again pays that job again.
+    * So the first read of `path` infers with a plain
+    * `spark.read.parquet` and keeps the schema with the path's file
+    * fingerprint and the session conf. Every read lists the files
+    * again (one Hadoop listing, no job); when the fingerprint and the
+    * conf both match, the read passes the kept schema and skips
+    * inference, otherwise it re-infers and replaces the entry. A
+    * rewrite that keeps every file's name, length and modification
+    * time is the one change this cannot see. A path that cannot be
+    * listed (missing, or a glob) takes the plain read, so Spark
+    * raises its own error.
+    */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val conf = spark.conf.getAll
+        Option(resolved.get(path)).filter(r => r.files == files && r.conf == conf) match {
+          case Some(r) => spark.read.schema(r.schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            resolved.put(path, Resolved(df.schema, files, conf))
+            df
+        }
+    }
+
+  private def fingerprint(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch {
+      case _: FileNotFoundException => None
+    }
+  }
 
   def readJson(spark: SparkSession, schema: StructType, path: String): DataFrame =
     spark.read.schema(schema).json(path)

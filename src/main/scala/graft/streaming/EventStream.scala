@@ -71,11 +71,17 @@ object EventStream {
     * type-corrupt fields, e.g. `"timestamp": "not-a-number"` — which
     * Spark's partial-results mode would otherwise smuggle into the
     * valid stream with a null timestamp) AND a non-null id.
+    *
+    * The parse is wrapped in [[graft.functions.Opaque]] so each route
+    * runs `from_json` once per row, as batch `ep_parse_route_valid`
+    * does: without the barrier, predicate pushdown copies the parse
+    * into each conjunct of the validity filter (three parses per row
+    * on the valid route, two on the error route).
     */
   def parseRoute(raw: DataFrame): (DataFrame, DataFrame) = {
-    val parsed = raw.withColumn("p",
+    val parsed = raw.withColumn("p", graft.functions.Opaque.once(
       from_json(col("value"), parseSchema,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))))
     val ok = col("p._corrupt").isNull && col("p.id").isNotNull
     val valid = parsed.filter(ok)
       // type coalesces to "" exactly like the reference's InputEvent

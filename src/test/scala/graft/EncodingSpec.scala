@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,6 +52,46 @@ class EncodingSpec extends AnyFunSuite {
       assert(out.schema("ts").dataType == LongType, s"$enc: ts must come out Long")
       val got = out.select("ts").as[Long].collect().sorted.toSeq
       assert(got == expected, s"$enc: nanos mismatch")
+    }
+  }
+
+  test("an events table overwritten in place with another ts encoding reads with the new one") {
+    // Tables reads keep each path's inferred schema while its files are
+    // unchanged; a regen in place must be re-inferred, or the old
+    // schema's Long would read the new file's micros unconverted
+    val dir = java.nio.file.Files.createTempDirectory("graft-enc-regen").toString
+    val expected = micros.map(_ * 1000L).sorted
+    writeFixture(dir, col("us") * 1000L)
+    val before = Tables.events(spark, dir).select("ts").as[Long].collect().sorted.toSeq
+    assert(before == expected)
+    writeFixture(dir, timestamp_micros(col("us")).cast(TimestampNTZType))
+    assert(Tables.read(spark, dir, "events").schema("ts").dataType == TimestampNTZType,
+      "the rewritten file's encoding was not re-inferred")
+    val after = Tables.events(spark, dir).select("ts").as[Long].collect().sorted.toSeq
+    assert(after == expected, s"stale normalization after the rewrite: $after")
+  }
+
+  test("a changed parquet inference conf re-infers an unchanged events table") {
+    // a TIMESTAMP(NANOS) ts reads as Long only under nanosAsLong; with
+    // it off, inference itself rejects the type. So a second read that
+    // reused the first read's schema would succeed where Spark fails.
+    val dir = java.nio.file.Files.createTempDirectory("graft-enc-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    micros.foreach(us => w.write(rows.newGroup().append("event_id", us).append("ts", us * 1000L)))
+    w.close()
+
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val first = Tables.events(spark, dir).select("ts").as[Long].collect().sorted.toSeq
+    assert(first == micros.map(_ * 1000L).sorted)
+    TestSpark.withConfs("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+      val e = intercept[Exception](Tables.events(spark, dir))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("PARQUET_TYPE_ILLEGAL")),
+        s"expected re-inference to reject TIMESTAMP(NANOS), got: $e")
     }
   }
 

@@ -59,6 +59,25 @@ class EventStreamSpec extends AnyFunSuite {
     assert(errors.head.getAs[String]("rawMessage") == "garbage")
   }
 
+  test("each route parses once per row: one from_json in its optimized plan") {
+    // without the Opaque barrier, predicate pushdown copies the parse
+    // into each conjunct of the validity filter (three parses on the
+    // valid route, two on the error route). A batch Range stands in
+    // for the stream (the same optimizer rules; a streaming plan only
+    // optimizes inside a started query, and a local Seq would be
+    // constant-folded away).
+    val (valid, errors) = EventStream.parseRoute(
+      spark.range(3).selectExpr("CAST(id AS STRING) AS value"))
+    for ((df, route) <- Seq(valid -> "valid", errors -> "error")) {
+      val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+        .queryExecution.optimizedPlan
+      val parses = plan.flatMap(_.expressions.flatMap(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+      }))
+      assert(parses.size == 1, s"$route route parses ${parses.size} times per row:\n$plan")
+    }
+  }
+
   test("should assign per-key sequences across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]

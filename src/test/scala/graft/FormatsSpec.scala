@@ -2,6 +2,9 @@ package graft
 
 import graft.sources.Formats
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.SparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,5 +59,33 @@ class FormatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val scan = clicks.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters: [isnotnull(event_type"),
       s"expected partition pruning in:\n$scan")
+  }
+
+  test("a re-read of an unchanged parquet path launches no schema-inference job") {
+    val pq = tmp()
+    Formats.writeParquet(Tables.events(spark, TestSpark.sfDir)
+      .selectExpr("event_id", "user_id"), pq)
+    val sc = spark.sparkContext
+    // counts only this thread's jobs (tagged by a job group), so a job
+    // from anything else running in the shared session cannot leak in
+    def jobsLaunchedBy(body: => Unit): Int = {
+      val group = s"formats-reread-${System.nanoTime()}"
+      val jobs = new AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.incrementAndGet()
+      }
+      SparkInternals.drainListeners(sc)
+      sc.addSparkListener(counter)
+      sc.setJobGroup(group, "Formats.readParquet re-read check")
+      try { body; SparkInternals.drainListeners(sc) }
+      finally { sc.clearJobGroup(); sc.removeSparkListener(counter) }
+      jobs.get
+    }
+    val first = jobsLaunchedBy(Formats.readParquet(spark, pq))
+    assert(first >= 1, "the first read infers the schema with a Spark job")
+    val second = jobsLaunchedBy(Formats.readParquet(spark, pq))
+    assert(second == 0, s"the second read of an unchanged path launched $second job(s)")
   }
 }
