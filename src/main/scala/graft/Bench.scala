@@ -411,62 +411,35 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18: let AQE convert sort-merge joins to shuffled-hash joins
-      // at runtime when EVERY post-shuffle partition is under this
-      // bound (guide §3.1; default 0 = never). Runtime-size-gated, so
-      // it is scale-safe by construction — a partition too big for a
-      // per-task hash map simply stays sort-merge, and the bound is a
-      // per-task memory cap a production executor budget absorbs
-      // (64 MB/task vs the >= 1 GB/core norm). LOCALLY INERT, kept for
-      // the cluster: at sf0.1 every convertible join goes BROADCAST at
-      // runtime instead, so the threshold never fires — final executed
-      // plans are byte-identical at 0 vs 256m (plans/r18), and a
-      // position-balanced interleaved A/B over the seven hottest
-      // pair-join queries reads a wash (±6–9% both directions). An
-      // earlier fixed-order A/B had credited this conf with −24–40%;
-      // that was measured to be second-position cache/JIT warmth (the
-      // A/A control in OPTIMIZATION_r18.md), not the conf. On a
-      // cluster, where build sides exceed the broadcast cap but fit a
-      // per-task map, the conversion replaces two sorts per join —
-      // the guide-§3.1 case this posture is for.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      // r18, INVESTIGATED AND REJECTED: size-based AQE coalescing
-      // (coalescePartitions.parallelismFirst=false + a 16m advisory
-      // size, guide §2.2) was adopted mid-round on interleaved A/Bs
-      // showing 15/20 sampled queries −10..−54% — then reverted when
-      // an A/A control exposed a 6–46% second-position cache/JIT bias
-      // in the fixed A-then-B harness layout. Position-balanced
-      // re-measurement: the sample reads NET NEGATIVE (base 32.3 s vs
-      // 35.2 s; graph_pagerank +41%, graph_triangles +33%,
-      // corpus_dup_profile +20%, bpe_train +18% — compute-dense stages
-      // serialize when KB-sized local shuffles coalesce below the core
-      // count; wins were modest and confined to scan-heavy TPC-H
-      // rows). At sf0.1 most shuffles are << one advisory unit TOTAL,
-      // so byte-derived counts mean 1-partition stages — a small-input
-      // pathology the parallelism-first default exists to prevent. On
-      // a cluster the size-based policy is still the right one (guide
-      // §9: 256m advisory); it belongs in submit-time conf there, not
-      // hard-coded here where the driver's own bench would pay for it.
-      // Full evidence: OPTIMIZATION_r18.md "Measurement-bias
-      // discovery" + the coalescing section.
-      .getOrCreate()
+    val spark = GraftRuntime.local(cpus.toInt,
+      "spark.sql.adaptive.enabled" -> "true", GraftRuntime.ShjThreshold)
+    // r18, INVESTIGATED AND REJECTED: size-based AQE coalescing
+    // (coalescePartitions.parallelismFirst=false + a 16m advisory
+    // size, guide §2.2) was adopted mid-round on interleaved A/Bs
+    // showing 15/20 sampled queries −10..−54% — then reverted when
+    // an A/A control exposed a 6–46% second-position cache/JIT bias
+    // in the fixed A-then-B harness layout. Position-balanced
+    // re-measurement: the sample reads NET NEGATIVE (base 32.3 s vs
+    // 35.2 s; graph_pagerank +41%, graph_triangles +33%,
+    // corpus_dup_profile +20%, bpe_train +18% — compute-dense stages
+    // serialize when KB-sized local shuffles coalesce below the core
+    // count; wins were modest and confined to scan-heavy TPC-H
+    // rows). At sf0.1 most shuffles are << one advisory unit TOTAL,
+    // so byte-derived counts mean 1-partition stages — a small-input
+    // pathology the parallelism-first default exists to prevent. On
+    // a cluster the size-based policy is still the right one (guide
+    // §9: 256m advisory); it belongs in submit-time conf there, not
+    // hard-coded here where the driver's own bench would pay for it.
+    // Full evidence: OPTIMIZATION_r18.md "Measurement-bias
+    // discovery" + the coalescing section.
     spark.sparkContext.setLogLevel("ERROR")
-    plans.GraftOps.install(spark)
     val metrics = new ShuffleMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     // Drain FIRST, then read: pending task-end events from whatever
     // ran before (warmup, a failed rep with no end-drain) must be
     // applied to the counters before they serve as a baseline.
     def settledCounters(): (Long, Long) = {
-      org.apache.spark.graft.SparkInternals.drainListeners(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
       (metrics.shuffleBytes.get(), metrics.spillBytes.get())
     }
 

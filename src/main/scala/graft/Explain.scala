@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps the formatted physical plan of every registered query to
@@ -14,15 +13,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.drop(1).headOption.getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftRuntime.local(4)
     spark.sparkContext.setLogLevel("ERROR")
-    plans.GraftOps.install(spark)
     val sb = new StringBuilder
     sb.append("# Physical plans (formatted), generated by graft.Explain\n\n")
     sb.append(s"Data: `$sfDir` — regenerate with " +

@@ -1,61 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session extensions for cluster deployments: registers graft's
-  * native expressions so SQL users get them without touching the
-  * session builder code —
+/** Session extensions for cluster deployments: injects the whole
+  * [[GraftRuntime]] catalog so SQL users get graft's functions,
+  * strategies and rewrite without touching the session builder code —
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[functions.LongArrayDot].getName, "graft_dot"),
-      exprs => functions.GraftFunctions.dotBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_rolling_minhash"),
-      new ExpressionInfo(classOf[functions.RollingMinHash].getName, "graft_rolling_minhash"),
-      exprs => functions.GraftFunctions.rollingMinHashBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_approx_distinct"),
-      new ExpressionInfo(classOf[functions.HllSketchAgg].getName, "graft_approx_distinct"),
-      exprs => functions.GraftFunctions.approxDistinctBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_approx_quantiles"),
-      new ExpressionInfo(classOf[functions.DdSketchAgg].getName, "graft_approx_quantiles"),
-      exprs => functions.GraftFunctions.approxQuantilesBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_heavy_hitters"),
-      new ExpressionInfo(classOf[functions.FreqSketchAgg].getName, "graft_heavy_hitters"),
-      exprs => functions.GraftFunctions.heavyHittersBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-        "graft_bloom_agg"),
-      exprs => functions.GraftFunctions.bloomAggBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-        "graft_bloom_contains"),
-      exprs => functions.GraftFunctions.bloomContainsBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_word_ngrams"),
-      new ExpressionInfo(classOf[functions.WordNgrams].getName, "graft_word_ngrams"),
-      exprs => functions.GraftFunctions.wordNgramsBuilder(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_ln9"),
-      new ExpressionInfo("graft.operators.Select", "graft_ln9"),
-      exprs => functions.GraftFunctions.ln9Builder(exprs)))
-    e.injectPlannerStrategy(_ => plans.TopKStrategy)
-    e.injectPlannerStrategy(_ => plans.AsofJoinStrategy)
-    e.injectPlannerStrategy(_ => plans.RangeJoinStrategy)
+    GraftRuntime.sqlFunctions.foreach(f =>
+      e.injectFunction((f.identifier, f.info, f.builder)))
+    GraftRuntime.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
     // operator-optimization batch: fires on the clean Filter-over-
     // Window shape, before Spark's own InferWindowGroupLimit
-    e.injectOptimizerRule(_ => plans.InferTopKPerKey)
+    GraftRuntime.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }

@@ -90,7 +90,8 @@ final class GraftSession(val spark: SparkSession, val sfDir: String,
     case "decontaminate_embedding"  => embFam.decontaminate
     // dedup_embedding_blocked deliberately falls through: routing it
     // over the session's persisted scan was built and MEASURED SLOWER
-    // (r10 ReuseBench: 3.14 -> 3.93 s at sf0.1, -14% at 100x) — its
+    // (r10, SCALE100_r09.json: 3.14 -> 3.93 s at sf0.1, -14% at 100x;
+    // the ReuseBench main that measured it is at commit 89505f5) — its
     // dominant cost is Lloyd assignment + banding, not the corpus
     // scan, so cache reuse saves nothing while InMemoryTableScan of
     // array rows loses to the vectorized parquet re-read. The seam

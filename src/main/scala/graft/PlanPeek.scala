@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only: formatted physical plan of ONE registered query against
   * an arbitrary data dir — for checking how a plan CHANGES across
   * scale tiers (Explain.scala dumps the whole registry at sf0.001;
   * building the whole registry against a 100x tier would execute the
-  * eager-loop queries).
+  * eager-loop queries). Runs on `SPARK_GRAFT_CPUS` cores (default 4)
+  * with one shuffle partition per core, as Bench does, so it prints
+  * the plans Bench executes.
   *
   * Usage: sbt "runMain graft.PlanPeek <query> [dir] [mode]"
   */
@@ -16,15 +17,9 @@ object PlanPeek {
     val name = args(0)
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val mode = args.drop(2).headOption.getOrElse("formatted")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    plans.GraftOps.install(spark)
     println(SparkEntry.queries(name)(spark, dir)
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.explainString(ExplainMode.fromString(mode)))

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Derivation of the scaled rehearsal corpus — factored out of
-  * [[ScaleRehearsal]] (r14) so the scale-tier invariant gate
-  * ([[ScaleGate]]) measures the SAME corpus the rehearsal times, and
+/** Derivation of the scaled rehearsal corpus — factored out of the
+  * ScaleRehearsal main (r14; SCALE100_r07–r14.json, source at commit
+  * 89505f5) so the scale-tier invariant gate ([[ScaleGate]]) measures the
+  * SAME corpus the rehearsal timed, and
   * so the derivation's crash-consistency story lives in one place:
   *
   *  - the `derived_copies.txt` stamp is written AFTER every table

@@ -1632,16 +1632,9 @@ object ScaleGate {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale100")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    plans.GraftOps.install(spark)
     ScaleCorpus.ensure(spark, src, out, copies)
     // r16: the C-family laws need the TPC-H tables derived, not
     // symlinked (own stamp - upgrades a pre-r16 corpus in place)

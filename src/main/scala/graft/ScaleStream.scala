@@ -267,17 +267,10 @@ object ScaleStream {
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale100")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "100").toInt
     val slices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val work = sys.env.getOrElse("SPARK_GRAFT_STREAM_WORK", "/tmp/graft_scalestream")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    plans.GraftOps.install(spark)
     ScaleCorpus.ensure(spark, srcSf, scaledDir, copies)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,22 +22,10 @@ object Verify {
         s"unknown query names in filter: ${unknown.mkString(", ")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects;
-      // read as Long (ns since epoch) and convert explicitly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r18: same AQE sort-merge -> shuffled-hash conversion bound as
-      // Bench (see its comment) — correctness must verify the plans
-      // the bench actually executes.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      .getOrCreate()
+    // the same SMJ->SHJ bound as Bench, so correctness verifies the
+    // plans the bench actually executes
+    val spark = GraftRuntime.local(cpus.toInt, GraftRuntime.ShjThreshold)
     spark.sparkContext.setLogLevel("WARN")
-    plans.GraftOps.install(spark)
     new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -73,7 +72,8 @@ case class LongArrayDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Column-API and SQL registration for graft's native expressions. */
+/** Column API and SQL builders for graft's native expressions (the SQL
+  * names are listed in [[graft.GraftRuntime.sqlFunctions]]). */
 object GraftFunctions {
   // Spark 4's Column is Connect-agnostic (no .expr); the bridge in
   // org.apache.spark.sql.graft converts Column <-> Expression.
@@ -250,26 +250,5 @@ object GraftFunctions {
     }
     WordNgrams(exprs(0), intLit(exprs(1), "n"),
       boolLit(exprs(2), "short_doc_fallback"), boolLit(exprs(3), "distinct"))
-  }
-
-  /** Idempotent per-session SQL registration of all graft functions. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot", dotBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_word_ngrams", wordNgramsBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_rolling_minhash", rollingMinHashBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_approx_distinct", approxDistinctBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_approx_quantiles", approxQuantilesBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_heavy_hitters", heavyHittersBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg", bloomAggBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_contains", bloomContainsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("graft_ln9", ln9Builder, "built-in")
   }
 }

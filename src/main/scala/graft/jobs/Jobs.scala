@@ -53,9 +53,6 @@ private[graft] object Jobs {
           "shared storage (see k8s/graft-job.yaml sparkConf)"))
     s"${base.stripSuffix("/")}/$query"
   }
-
-  def session(appName: String): SparkSession =
-    SparkSession.builder().appName(appName).getOrCreate()
 }
 
 /** Event processor (reference EventProcessorJob.kt:58-78): Kafka
@@ -90,7 +87,7 @@ object EventProcessorMain {
 
   def main(args: Array[String]): Unit = {
     val a = Jobs.parseArgs(args)
-    val spark = Jobs.session("graft-event-processor")
+    val spark = graft.GraftRuntime.submitted("graft-event-processor")
     val bootstrap = Jobs.arg(a, "kafka-bootstrap-servers")
     val raw = EventStream.kafkaSource(spark, bootstrap,
         Jobs.arg(a, "input-topic"), Jobs.arg(a, "consumer-group"))
@@ -129,7 +126,7 @@ object AggregationMain {
 
   def main(args: Array[String]): Unit = {
     val a = Jobs.parseArgs(args)
-    val spark = Jobs.session("graft-aggregation")
+    val spark = graft.GraftRuntime.submitted("graft-aggregation")
     val bootstrap = Jobs.arg(a, "kafka-bootstrap-servers")
     val raw = EventStream.kafkaSource(spark, bootstrap,
         Jobs.arg(a, "input-topic"), Jobs.arg(a, "consumer-group"))
@@ -330,13 +327,8 @@ object LocalPipelineMain {
     val a = Jobs.parseArgs(args)
     val dir = a.getOrElse("dir", "/tmp/graft_local_pipeline")
     val rows = a.get("rows").map(_.toLong).getOrElse(4000L)
-    val cpus = a.getOrElse("cpus", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = a.getOrElse("cpus", "8").toInt
+    val spark = graft.GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val s = run(spark, dir, rows)
     val checksJson = s.checks.map { case (inv, pass, det) =>
@@ -357,7 +349,7 @@ object ProducerMain {
 
   def main(args: Array[String]): Unit = {
     val a = Jobs.parseArgs(args)
-    val spark = Jobs.session("graft-event-producer")
+    val spark = graft.GraftRuntime.submitted("graft-event-producer")
     val rps = a.get("rows-per-second").map(_.toInt).getOrElse(2)
     EventStream.kafkaSink(
         EventStream.generator(spark, rps).select(col("value")),

@@ -181,16 +181,9 @@ object LocalCorpusPipelineMain {
     val a = Jobs.parseArgs(args)
     val dir = a.getOrElse("dir", "/tmp/graft_corpus_pipeline")
     val sfDir = a.getOrElse("sf", "/root/testdata/sf0.01")
-    val cpus = a.getOrElse("cpus", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = a.getOrElse("cpus", "8").toInt
+    val spark = graft.GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftOps.install(spark)
     val s = run(spark, dir, sfDir)
     def esc(x: String): String = x.flatMap {
       case '"' => "\\\""

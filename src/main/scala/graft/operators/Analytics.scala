@@ -643,7 +643,8 @@ object Analytics {
   val qBloomPrune = QueryDef(
     "q_bloom_prune",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
+      // the SQL names below resolve on any session, installed or not
+      graft.plans.GraftOps.install(s)
       s.sql(s"""WITH big AS (
           SELECT o_orderkey FROM parquet.`$d/orders.parquet`
           WHERE o_totalprice > 400000)

@@ -171,7 +171,8 @@ object Curate {
     * 100x-proven; the composition adds no new shuffle class. NOT
     * name-routed by [[graft.GraftSession]]: its dominant branch is the
     * blocked path, whose session routing was built and measured SLOWER
-    * (r10 ReuseBench — Lloyd assignment, not the scan, dominates); the
+    * (r10, SCALE100_r09.json; ReuseBench main at commit 89505f5 — Lloyd
+    * assignment, not the scan, dominates); the
     * [[Shared.EmbFamilySession.curatedEmb]] seam stays available for
     * callers whose caches are already hot.
     */

@@ -291,8 +291,9 @@ object Graph {
       // argmax via the bounded-heap TopKPerKey (k=1), not
       // max(struct(..)): struct aggregates are not HashAggregate-able,
       // so Catalyst would SortAggregate the (node, label)-pair stream
-      // every round — a per-round full sort that HierTierProbe showed
-      // becomes the wall at corpus-scale streams. Ordering (cnt desc,
+      // every round — a per-round full sort that HIERTIER_r12.json
+      // showed becomes the wall at corpus-scale streams (HierTierProbe
+      // main at commit 89505f5). Ordering (cnt desc,
       // lbl asc) == the old max(struct(cnt, -lbl)) contract; cnt is a
       // LONG, so the exact-integer order path applies.
       val next = graft.plans.GraftOps.topKPerKey(

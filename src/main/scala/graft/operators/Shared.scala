@@ -360,13 +360,13 @@ object Shared {
       * label pair stream: its blocking is Lloyd cells, not labels).
       *
       * MEASURED SLOWER than the registered query and therefore NOT
-      * name-routed by [[graft.GraftSession]] (r10 ReuseBench: 3.14 ->
-      * 3.93 s at sf0.1, 374 -> 425 s at 100x): the blocked path's
+      * name-routed by [[graft.GraftSession]] (r10, SCALE100_r09.json:
+      * 3.14 -> 3.93 s at sf0.1, 374 -> 425 s at 100x): the blocked path's
       * dominant cost is Lloyd assignment + banding, not the scan, so
       * the cache saves nothing while InMemoryTableScan of array-typed
       * rows loses to the vectorized parquet re-read it replaces. Kept
-      * as the measurement seam (ReuseBench `SPARK_GRAFT_REUSE_EMB_
-      * FAMILY`) and for callers whose emb cache is already hot.
+      * as the measurement seam (the ReuseBench main at commit 89505f5
+      * drove it) and for callers whose emb cache is already hot.
       */
     def blocked: DataFrame = {
       guard("dedup_embedding_blocked")

@@ -302,8 +302,9 @@ object Similarity {
 
   /** (vec_id, band_id, band_val) banding of [[augmentedHi]] under an
     * ARBITRARY (bands × bits) split of the [[HiPlanes]] hyperplanes —
-    * the probe seam ScaleProbe uses to measure the band-width scaling
-    * law directly (candidate volume per band follows Σ_buckets c²/2 ≈
+    * the seam the ScaleProbe main (SCALE100_r06/r07.json; source at
+    * commit 89505f5) used to measure the band-width scaling law directly
+    * (candidate volume per band follows Σ_buckets c²/2 ≈
     * rate·n²/2, rate ∝ 2^-bits on random pairs, so bits must grow
     * ~2·log2 n to keep candidates linear — the rule the
     * [[dedupEmbeddingHi]] Scaladoc states, here measurable).
@@ -436,7 +437,8 @@ object Similarity {
     * OR-amplification rule ([[graft.functions.Hyperplanes.bandsFor]]:
     * >= 98% recall at the cosine-0.85 design point) — total candidate
     * work n·bands(n) ~ n^(1+rho), rho ~ 0.28, vs the fixed-width n².
-    * The honest trade, measured per-tier in ScaleProbe: recall HOLDS
+    * The honest trade, measured per-tier in SCALE100_r06/r07.json
+    * (ScaleProbe main at commit 89505f5): recall HOLDS
     * at every corpus size (a fixed 60-bit band would be linear but
     * misses ~all true pairs: per-pair hit rate p1^60 ~ 1e-5), while
     * candidates/vector grow only as the sublinear LSH exponent.
@@ -531,8 +533,8 @@ object Similarity {
     })
 
   /** Banded candidate PAIR COUNT for [[dedupEmbeddingWide]] at an
-    * explicit (bands, bits) — ScaleProbe's seam for the per-tier
-    * candidate-law measurement.
+    * explicit (bands, bits) — the seam for the per-tier
+    * candidate-law measurement (SCALE100_r06/r07.json).
     */
   private[graft] def wideCandidates(
       s: SparkSession, d: String, bands: Int, bits: Int): Long =
@@ -934,8 +936,9 @@ $blockedStage1Sql,
     *     it (an equi-join on super: n·(k/k1) ≈ n·sqrt(k) evals).
     *     Child centroids live as a JOINED TABLE — never collected to
     *     the driver, never shipped in the plan: exactly the state
-    *     placement BlockPlanProbe showed the flat path cannot have
-    *     past ~2 GB of payload.
+    *     placement the flat path cannot have past ~2 GB of payload
+    *     (SCALE100_r09.json, HIERTIER_r12.json; BlockPlanProbe main at
+    *     commit 89505f5).
     *  3. Final assignment probes the top-[[BlockProbe]]
     *     supers-WITH-CHILDREN (so every vector always finds a cell —
     *     a super can end up childless when no seed lands in it) and
@@ -976,7 +979,8 @@ $blockedStage1Sql,
 
   /** [[hierAssign]] over a caller-supplied augmented corpus of shape
     * (vec_id, qa, na) with ids dense from 0 (seeds are the first k1 /
-    * k ids) — the HierTierProbe seam: the paying-tier measurement
+    * k ids) — the paying-tier seam (HIERTIER_r12.json; the
+    * HierTierProbe main that drove it is at commit 89505f5): the measurement
     * (k past [[MaxBlockCells]], where flat assignment is refused)
     * streams a synthetic corpus through the EXACT registered dataflow
     * instead of a re-implementation, so the probe's numbers are the
@@ -1018,8 +1022,9 @@ $blockedStage1Sql,
   // EVERY top-1 step in the hier family rides the bounded-heap
   // TopKPerKey (k=1), never min(struct(..)): Min over a struct buffer
   // is not HashAggregate-able, so Catalyst plans it as SortAggregate —
-  // a full sort of the n·k1-row scored stream per step. HierTierProbe
-  // measured that shape fatal at the paying tier (tier-1 already
+  // a full sort of the n·k1-row scored stream per step.
+  // HIERTIER_r12.json measured that shape fatal at the paying tier
+  // (HierTierProbe main at commit 89505f5; tier-1 already
   // sorts n·k1 rows; carrying the 64-long vector payload inside the
   // min-struct, as vTop1 once did, made it n·k1 × ~560 B ≈ 300 GB of
   // sort spill — disk-full abort). TopKPerKey folds to one row per
@@ -1142,7 +1147,7 @@ $blockedStage1Sql,
     // not min-agg + join-back-and-min-again: the join formulation
     // re-SHUFFLES the scored frame it aggregates (n·k1 rows here,
     // n·probe·(k/k1) below — hundreds of GB at the paying tier
-    // k > MaxBlockCells, where HierTierProbe measures this path),
+    // k > MaxBlockCells, where HIERTIER_r12.json measured this path),
     // while TopKPerKey folds to <=probe rows per vector map-side
     // before any exchange. Ordering (-sd, super): highest negated
     // distance + lowest-id tie-break == the old min-struct (sd, super)
@@ -1400,12 +1405,6 @@ $blockedStage1Sql,
       .select(col("vec_id"), col("pos").as("band_id"), col("col").as("band_val"))
 
   private[graft] def nearDupTau: Double = NearDupTau
-
-  /** Augmentation copy-id offset — ScaleProbe keys the known true
-    * pairs (i, i + copyOffset) off this for its per-tier band-recall
-    * measurement.
-    */
-  private[graft] def copyOffset: Long = CopyOffset
 
   private[graft] def cosineCol(d: Column, na: Column, nb: Column): Column =
     cosine(d, na, nb)
@@ -2489,7 +2488,7 @@ $blockedStage1Sql,
     // argmin via the bounded-heap TopKPerKey (k=1), not
     // min(struct(..)): struct aggregates are not HashAggregate-able,
     // so Catalyst plans them as SortAggregate — a full sort of the
-    // n·K-row scored stream (HierTierProbe priced that shape fatal for
+    // n·K-row scored stream (HIERTIER_r12.json priced that shape fatal for
     // hier's assignment; the same fold here is n·K·24 B of sort spill
     // a cluster pays for nothing). Ordering (-dist, cell) == the old
     // min-struct (dist, cell) contract; dist is a LONG, so the

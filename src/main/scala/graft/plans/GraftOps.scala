@@ -3,21 +3,25 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graft.Bridge
 
+import graft.GraftRuntime
+
 /** DataFrame-level API for graft's custom operators. */
 object GraftOps {
 
-  /** Opt a session into graft's planner extensions at runtime: the
-    * custom-operator strategies plus the [[InferTopKPerKey]] rewrite
-    * (row_number-filter top-k idiom → bounded-heap TopKPerKey). The
-    * same set is installed declaratively by
-    * `spark.sql.extensions=graft.GraftExtensions`; this entry point
-    * covers sessions built without the config. Idempotent.
+  /** Opt a session into the whole [[GraftRuntime]] catalog at
+    * runtime: the SQL functions, the custom-operator strategies and the
+    * [[InferTopKPerKey]] rewrite (row_number-filter top-k idiom →
+    * bounded-heap TopKPerKey). The same catalog is injected
+    * declaratively by `spark.sql.extensions=graft.GraftExtensions`;
+    * this entry point covers sessions built without the config.
+    * Idempotent: a function name the session already resolves is left
+    * as it is, and no strategy or rule is listed twice.
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Bridge.addStrategy(spark, TopKStrategy)
-    Bridge.addStrategy(spark, AsofJoinStrategy)
-    Bridge.addStrategy(spark, RangeJoinStrategy)
-    Bridge.addOptimization(spark, InferTopKPerKey)
+    GraftRuntime.sqlFunctions.foreach(f =>
+      Bridge.addFunction(spark, f.identifier, f.info, f.builder))
+    GraftRuntime.strategies.foreach(Bridge.addStrategy(spark, _))
+    GraftRuntime.optimizerRules.foreach(Bridge.addOptimization(spark, _))
   }
 
   /** Per-key top-k without a window sort: keep the `k` rows with the

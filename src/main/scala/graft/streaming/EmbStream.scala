@@ -113,8 +113,9 @@ object EmbStream {
     // min-id partner via the bounded-heap TopKPerKey (k=1), not
     // min(struct(..)): the struct fold plans as SortAggregate — a full
     // sort of the per-batch candidate stream, which scales with the
-    // index, not the batch (the same wall HierTierProbe priced batch-
-    // side). foreachBatch bodies execute as ordinary batch plans, so
+    // index, not the batch (the same wall HIERTIER_r12.json priced
+    // batch-side; HierTierProbe main at commit 89505f5). foreachBatch
+    // bodies execute as ordinary batch plans, so
     // the custom operator applies. Ordering: lowest j wins; j is
     // unique per (i, j) candidate after dropDuplicates, so the old
     // struct's cos component never tie-broke — the tie column is j
@@ -276,7 +277,7 @@ object EmbStream {
     * cached (the regime probe + for flat codebooks the k-row collect
     * both happen only on the first batch after a load or a re-block).
     */
-  private[graft] def loadCodebook(
+  private def loadCodebook(
       spark: org.apache.spark.sql.SparkSession, centDir: String): Codebook = {
     val key = cbKey(centDir)
     val epoch = readEpoch(spark, centDir)
@@ -326,7 +327,7 @@ object EmbStream {
     * [[Similarity.hierCellsOf]] consumes — lazy plans over `centDir`,
     * never collected.
     */
-  private[graft] def hierCodebookFrames(
+  private def hierCodebookFrames(
       spark: org.apache.spark.sql.SparkSession,
       centDir: String): (DataFrame, DataFrame) = {
     val src = spark.read.parquet(centDir)
@@ -600,7 +601,7 @@ object EmbStream {
     * identical exact-cosine semantics to the banded loop and the
     * batch operators.
     */
-  private[graft] def dedupBatchBlockedFrom(
+  private def dedupBatchBlockedFrom(
       batchQ: DataFrame, qCells: DataFrame, bandIndex: DataFrame,
       vecs: DataFrame, tau: Double): DataFrame = {
     val bandRows = bandRowsOfCells(qCells)

@@ -5,12 +5,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
-/** Classic-mode Column <-> catalyst Expression bridge.
+/** graft's one shim onto Spark internals (classic mode).
   *
   * Spark 4's public `Column` is Connect-agnostic and no longer exposes
   * `.expr`; the conversion lives in `private[sql]` ExpressionUtils, so
   * this shim sits in the sql package namespace — the same pattern
-  * public Spark extension libraries use for Dataset/plan access.
+  * public Spark extension libraries use for Dataset/plan access. Being
+  * inside `org.apache.spark`, it also reaches the `private[spark]`
+  * core members graft needs (the listener bus).
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -45,6 +47,19 @@ object Bridge {
   def newHadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 
+  /** Runtime registration of a SQL function. Idempotent: a name the
+    * session already resolves (registered earlier, or injected by
+    * `spark.sql.extensions`) is skipped, not replaced.
+    */
+  def addFunction(spark: org.apache.spark.sql.SparkSession,
+      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
+      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    if (!registry.functionExists(name)) registry.registerFunction(name, info, builder)
+  }
+
   /** Runtime registration of an extra planner strategy (idempotent). */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
@@ -66,4 +81,12 @@ object Bridge {
       exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
   }
+
+  /** Blocks until every queued listener event has been delivered.
+    * `listenerBus` is private[spark], and benchmark metric attribution
+    * needs a deterministic flush point between queries — polling or
+    * sleeping would race the event queue.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

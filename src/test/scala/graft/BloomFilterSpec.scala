@@ -13,7 +13,6 @@ class BloomFilterSpec extends AnyFunSuite {
     s"(SELECT graft_bloom_agg(id) FROM range(0, 1000) WHERE $filter)"
 
   test("no false negatives: every inserted key probes true") {
-    functions.GraftFunctions.register(spark)
     val n = spark.sql(
       s"""SELECT COUNT(*) AS n FROM range(0, 1000)
           WHERE id % 7 = 0
@@ -23,7 +22,6 @@ class BloomFilterSpec extends AnyFunSuite {
   }
 
   test("false positives are rare and removable by an exact join") {
-    functions.GraftFunctions.register(spark)
     // probe 100k keys against a 143-key filter: FPP should be far
     // below 5% at the default sizing (1M expected items)
     val fp = spark.sql(
@@ -34,7 +32,6 @@ class BloomFilterSpec extends AnyFunSuite {
   }
 
   test("bloom probe handles null without error and never admits it") {
-    functions.GraftFunctions.register(spark)
     val rows = spark.sql(
       s"""SELECT graft_bloom_contains(${bloomOf("id % 7 = 0")},
                                       CAST(NULL AS BIGINT)) AS hit""")

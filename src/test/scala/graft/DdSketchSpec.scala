@@ -91,7 +91,6 @@ class DdSketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration: graft_approx_quantiles works end-to-end") {
-    graft.functions.GraftFunctions.register(spark)
     spark.range(1000).select((col("id") + 1).cast("double").as("v"))
       .createOrReplaceTempView("dd_sql_probe")
     val arr = spark.sql(

@@ -3,7 +3,7 @@ package graft
 import graft.sources.Formats
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graft.SparkInternals
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,10 +76,10 @@ class FormatsSpec extends AnyFunSuite with BeforeAndAfterAll {
           if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
             jobs.incrementAndGet()
       }
-      SparkInternals.drainListeners(sc)
+      Bridge.drainListeners(sc)
       sc.addSparkListener(counter)
       sc.setJobGroup(group, "Formats.readParquet re-read check")
-      try { body; SparkInternals.drainListeners(sc) }
+      try { body; Bridge.drainListeners(sc) }
       finally { sc.clearJobGroup(); sc.removeSparkListener(counter) }
       jobs.get
     }

@@ -59,7 +59,6 @@ class FreqSketchSpec extends AnyFunSuite {
   }
 
   test("SQL registration: graft_heavy_hitters works end-to-end") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     Seq("x", "x", "y").toDF("item").createOrReplaceTempView("hh_sql_probe")
     val rows = spark.sql(

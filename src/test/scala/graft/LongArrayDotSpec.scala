@@ -22,21 +22,18 @@ class LongArrayDotSpec extends AnyFunSuite {
     assert(got == ref)
   }
 
-  test("is registered for SQL via GraftFunctions and GraftExtensions") {
-    GraftFunctions.register(spark)
+  test("graft_dot resolves in SQL on the installed session") {
     val r = spark.sql("SELECT graft_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
       .collect().head.getLong(0)
     assert(r == 32L)
   }
 
   test("norm via self-dot") {
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT graft_dot(array(3L, 4L), array(3L, 4L)) AS d")
       .collect().head.getLong(0) == 25L)
   }
 
   test("rolling minhash and HLL aggregate are SQL-registered too") {
-    GraftFunctions.register(spark)
     // SQL path agrees with the Column API path
     val viaSql = spark.sql(
       "SELECT graft_rolling_minhash('the quick brown fox', 8) AS h")

@@ -198,8 +198,9 @@ class PlanSpec extends AnyFunSuite {
   test("argmin/argmax folds plan as bounded heaps, never SortAggregate (r12)") {
     // Min/Max over a struct is not HashAggregate-able, so a
     // min(struct(dist, cell))-style fold plans as SortAggregate — a
-    // full sort of the scored stream that HierTierProbe measured
-    // fatal at the paying tier (300 GB of sort spill when the struct
+    // full sort of the scored stream that HIERTIER_r12.json measured
+    // fatal at the paying tier (HierTierProbe main at commit 89505f5;
+    // 300 GB of sort spill when the struct
     // carried the vector payload). The r12 sweep moved every such
     // fold to TopKPerKey; this guard keeps them there. ann_ivf and
     // emb_kmeans have the n·K argmin IN their final plan (no

@@ -33,7 +33,6 @@ class SelectSpec extends AnyFunSuite {
   }
 
   test("graft_ln9 is SQL-registered and exact below the table bound") {
-    functions.GraftFunctions.register(spark)
     // below 4096 the mantissa is the value itself: exact floor(ln·1e9)
     assert(spark.sql("SELECT graft_ln9(1000L) AS l").collect().head.getLong(0)
       == math.floor(math.log(1000.0) * 1e9).toLong)

@@ -5,16 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftRuntime.local(4, "spark.app.name" -> "graft-test")
     s.sparkContext.setLogLevel("WARN")
-    plans.GraftOps.install(s)
     s
   }
   val sfDir = "/root/testdata/sf0.001"

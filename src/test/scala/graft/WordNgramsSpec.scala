@@ -81,7 +81,6 @@ class WordNgramsSpec extends AnyFunSuite {
 
   test("SQL registration builds the expression") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((1L, "a b c d")).toDF("id", "t")
     df.createOrReplaceTempView("wn_t")
     val rows = spark.sql(
