@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.graft.Bridge
 
 import graft.functions.GraftFunctions
 
@@ -20,6 +21,8 @@ import graft.functions.GraftFunctions
   *  - [[local]] builds the local-mode session every main and the tests
   *    run on; [[submitted]] picks up the session spark-submit
   *    configured (the k8s mains).
+  *  - [[sessionConfs]] are the session settings both kinds of session
+  *    run with.
   */
 object GraftRuntime {
 
@@ -58,6 +61,28 @@ object GraftRuntime {
 
   val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(plans.InferTopKPerKey)
 
+  /** Session settings every graft session runs with. [[plans.GraftOps.install]]
+    * and [[submitted]] apply them through `Bridge.setUnlessSet`, so a
+    * key the session already sets explicitly (a builder `.config`, a
+    * spark-submit `--conf`, an earlier `spark.conf.set`) keeps its
+    * value.
+    *
+    * `spark.sql.artifact.isolation.enabled=false`: Spark 4.1 defaults
+    * it to true, and every streaming query starts on a cloned session
+    * with a new session UUID. Executors then build a fresh
+    * `IsolatedSessionState` per query start: a child-first class
+    * loader over an `ExecutorClassLoader` that asks the driver over RPC
+    * for every class it cannot find. `CodeGenerator` caches compiled
+    * classes by (context class loader, source), so each query start,
+    * and each `foreachBatch` batch of the new query, recompiled every
+    * whole-stage, projection and predicate class the JVM already held.
+    * graft registers no session artifacts (no `addArtifact`, `addJar`
+    * or `addFile`), so the isolation protects nothing here.
+    * `CodegenReuseSpec` pins the reuse.
+    */
+  val sessionConfs: Seq[(String, String)] =
+    Seq("spark.sql.artifact.isolation.enabled" -> "false")
+
   /** Local-mode session with the catalog installed: `local[cpus]`, one
     * shuffle partition per core, UTC session time, parquet
     * TIMESTAMP(NANOS) read as Long (the events tables carry it and
@@ -78,10 +103,14 @@ object GraftRuntime {
   }
 
   /** The session spark-submit configured (master, confs and
-    * `spark.sql.extensions` all come from the submit), named `appName`.
+    * `spark.sql.extensions` all come from the submit), named `appName`,
+    * with [[sessionConfs]] applied where the submit left them unset.
     */
-  def submitted(appName: String): SparkSession =
-    SparkSession.builder().appName(appName).getOrCreate()
+  def submitted(appName: String): SparkSession = {
+    val spark = SparkSession.builder().appName(appName).getOrCreate()
+    Bridge.setUnlessSet(spark, sessionConfs)
+    spark
+  }
 
   /** r18: let AQE convert sort-merge joins to shuffled-hash joins at
     * runtime when EVERY post-shuffle partition is under this bound

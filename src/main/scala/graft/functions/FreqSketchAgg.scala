@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.Bridge
@@ -41,9 +41,15 @@ case class FreqSketchAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[UTF8String, Long]] {
+  extends TypedImperativeAggregate[mutable.HashMap[UTF8String, Long]]
+  with ImplicitCastInputTypes {
 
   require(k >= 1, s"FreqSketchAgg capacity k must be >= 1, got $k")
+
+  // items are counted as strings: the analyzer casts a castable
+  // argument (e.g. a bigint) and rejects the rest, instead of `update`
+  // failing every task on the UTF8String cast
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def children: Seq[Expression] = child :: Nil
   override def nullable: Boolean = false

@@ -235,17 +235,22 @@ object LocalPipelineMain {
     //    together), so every later valid batch is dropped as late
     //    data — only the first batch's users ever aggregated.
     // One plain directory keeps mtime order authoritative: real files
-    // first, each flush strictly after (the 1.1 s sleep covers
-    // second-granularity filesystem timestamps).
+    // first, each flush strictly after (each flush file is dated 2 s
+    // after the newest file already there, which clears
+    // second-granularity filesystem timestamps without sleeping).
     import spark.implicits._
     spark.read.schema(rawSchema).text(s"$dir/valid")
       .write.mode("overwrite").text(s"$dir/agg_in")
     def appendFlush(ts: Long, seqNo: Int): Unit = {
-      Thread.sleep(1100)
+      val aggIn = new java.io.File(s"$dir/agg_in")
+      def dataFiles = aggIn.listFiles().filter(_.getName.startsWith("part-")).toSet
+      val before = dataFiles
       Seq(graft.streaming.ProcessedEvent(FlushId, "login", ts, 0L,
         Map.empty[String, String], seqNo))
         .toDF().select(to_json(struct(col("*"))).as("value"))
-        .write.mode("append").text(s"$dir/agg_in")
+        .write.mode("append").text(aggIn.getPath)
+      val latest = before.map(_.lastModified).max
+      (dataFiles -- before).foreach(_.setLastModified(latest + 2000L))
     }
 
     // stage 2 — watermarked sliding metrics through AggregationMain's

@@ -11,13 +11,16 @@ object GraftOps {
   /** Opt a session into the whole [[GraftRuntime]] catalog at
     * runtime: the SQL functions, the custom-operator strategies and the
     * [[InferTopKPerKey]] rewrite (row_number-filter top-k idiom →
-    * bounded-heap TopKPerKey). The same catalog is injected
-    * declaratively by `spark.sql.extensions=graft.GraftExtensions`;
-    * this entry point covers sessions built without the config.
+    * bounded-heap TopKPerKey), plus [[GraftRuntime.sessionConfs]].
+    * The same catalog is injected declaratively by
+    * `spark.sql.extensions=graft.GraftExtensions`; this entry point
+    * covers sessions built without the config.
     * Idempotent: a function name the session already resolves is left
-    * as it is, and no strategy or rule is listed twice.
+    * as it is, no strategy or rule is listed twice, and a conf key the
+    * session already sets keeps its value.
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+    Bridge.setUnlessSet(spark, GraftRuntime.sessionConfs)
     GraftRuntime.sqlFunctions.foreach(f =>
       Bridge.addFunction(spark, f.identifier, f.info, f.builder))
     GraftRuntime.strategies.foreach(Bridge.addStrategy(spark, _))

@@ -47,6 +47,14 @@ object Bridge {
   def newHadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 
+  /** Sets each `(key, value)` the session does not already set
+    * explicitly (builder `.config`, `--conf`, `spark.conf.set`); a key
+    * it sets keeps its value. `RuntimeConfig.contains` is private[sql].
+    */
+  def setUnlessSet(spark: org.apache.spark.sql.SparkSession,
+      confs: Seq[(String, String)]): Unit =
+    confs.foreach { case (k, v) => if (!spark.conf.contains(k)) spark.conf.set(k, v) }
+
   /** Runtime registration of a SQL function. Idempotent: a name the
     * session already resolves (registered earlier, or injected by
     * `spark.sql.extensions`) is skipped, not replaced.

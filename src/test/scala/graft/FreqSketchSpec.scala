@@ -68,6 +68,21 @@ class FreqSketchSpec extends AnyFunSuite {
       Seq(("x", 2L), ("y", 1L)))
   }
 
+  test("graft_heavy_hitters casts a non-string argument to string") {
+    val rows = spark.sql(
+      "SELECT explode(graft_heavy_hitters(id % 3)) AS e FROM range(100)")
+      .select("e.item", "e.est").collect()
+    assert(rows.toSeq.map(r => (r.getString(0), r.getLong(1))) ==
+      Seq(("0", 34L), ("1", 33L), ("2", 33L)))
+  }
+
+  test("graft_heavy_hitters rejects an argument with no cast to string at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_heavy_hitters(array(1)) FROM range(3)")
+    }
+    assert(e.getMessage.contains("graft_heavy_hitters"), e.getMessage)
+  }
+
   test("text_heavy_hitters matches the exact top-20 (sketch in exact regime)") {
     val rows = SparkEntry.queries("text_heavy_hitters")(spark, TestSpark.sfDir).collect()
     assert(rows.length == 20)
