@@ -79,9 +79,19 @@ object GraftRuntime {
     * graft registers no session artifacts (no `addArtifact`, `addJar`
     * or `addFile`), so the isolation protects nothing here.
     * `CodegenReuseSpec` pins the reuse.
+    *
+    * `fs.AbstractFileSystem.file.impl=graft.sources.GraftLocalFs`:
+    * `file://` paths opened through a `FileContext` built from the
+    * session's Hadoop conf (every streaming checkpoint manager builds
+    * its own that way) get Hadoop's `LocalFs` with its `chmod` and
+    * `readlink` done in process instead of by a forked process per
+    * created file and per rename. `LocalFsSpec` pins the parity and
+    * the missing forks. Other schemes are unaffected. A
+    * `spark.hadoop.`-prefixed setting of the key also counts as set.
     */
-  val sessionConfs: Seq[(String, String)] =
-    Seq("spark.sql.artifact.isolation.enabled" -> "false")
+  val sessionConfs: Seq[(String, String)] = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "fs.AbstractFileSystem.file.impl" -> classOf[sources.GraftLocalFs].getName)
 
   /** Local-mode session with the catalog installed: `local[cpus]`, one
     * shuffle partition per core, UTC session time, parquet

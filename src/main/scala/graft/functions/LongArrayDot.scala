@@ -200,13 +200,15 @@ object GraftFunctions {
     * `graft_bloom_agg` filter (bloom must be foldable or a scalar
     * subquery, mirroring Spark's runtime-filter contract). May return
     * false positives, never false negatives — callers keep an exact
-    * join for final semantics and use this only to prune early.
+    * join for final semantics and use this only to prune early. The
+    * probe hash is [[Unfolded]], so a constant probe, whose hash folds
+    * to a literal, still compiles.
     */
   def bloomContainsBuilder(exprs: Seq[Expression]): Expression = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, XxHash64}
     require(exprs.length == 2,
       s"graft_bloom_contains requires exactly 2 arguments, got ${exprs.length}")
-    BloomFilterMightContain(exprs(0), new XxHash64(Seq(exprs(1))))
+    BloomFilterMightContain(exprs(0), Unfolded(new XxHash64(Seq(exprs(1)))))
   }
 
   /** Column API for the unbounded deterministic ln: floor-scaled

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.DataType
 
@@ -46,4 +47,36 @@ object Opaque {
     * projection that names it.
     */
   def once(c: Column): Column = Bridge.column(Opaque(Bridge.eagerExpression(c)))
+}
+
+/** Pass-through wrapper that is never foldable and hands its value to
+  * the parent's generated code in a local variable. Constant folding
+  * still folds the child, but stops at this node, so a parent sees a
+  * variable where it would otherwise see a Java literal.
+  *
+  * For parents whose generated code splices the child's value after a
+  * cast: Spark's `BloomFilterMightContain` writes `(Long)<value>`,
+  * which janino reads as a subtraction when the value is a negative
+  * literal such as `-5L` ("Expression java.lang.Long is not an
+  * rvalue"), and every such probe fell back to interpreted evaluation.
+  */
+case class Unfolded(child: Expression) extends UnaryExpression {
+
+  override def foldable: Boolean = false
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "graft_unfolded"
+
+  override def eval(input: InternalRow): Any = child.eval(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = ${c.isNull};
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${c.value};""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

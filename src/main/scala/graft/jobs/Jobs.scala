@@ -113,11 +113,15 @@ object AggregationMain {
 
   /** The testable body: ProcessedEvent JSON strings in `value` ->
     * windowed metric rows serialized back to a `value` JSON column.
+    * The parse is [[graft.functions.Opaque]], as in
+    * `EventStream.parseRoute`: without it, the optimizer copies it into
+    * the pushed-down filter and the projection, and each row is parsed
+    * three times.
     */
   def pipeline(raw: DataFrame): DataFrame = {
     val schema = Encoders.product[graft.streaming.ProcessedEvent].schema
     val processed = raw
-      .select(from_json(col("value"), schema).as("p"))
+      .select(graft.functions.Opaque.once(from_json(col("value"), schema)).as("p"))
       .filter(col("p.originalId").isNotNull)
       .select(col("p.*"))
     EventStream.slidingMetrics(processed, EventTypes)

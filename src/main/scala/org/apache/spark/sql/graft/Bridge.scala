@@ -49,11 +49,15 @@ object Bridge {
 
   /** Sets each `(key, value)` the session does not already set
     * explicitly (builder `.config`, `--conf`, `spark.conf.set`); a key
-    * it sets keeps its value. `RuntimeConfig.contains` is private[sql].
+    * it sets keeps its value. A Hadoop key also counts as set when its
+    * `spark.hadoop.`-prefixed form is, the only form of it spark-submit
+    * passes on. `RuntimeConfig.contains` is private[sql].
     */
   def setUnlessSet(spark: org.apache.spark.sql.SparkSession,
       confs: Seq[(String, String)]): Unit =
-    confs.foreach { case (k, v) => if (!spark.conf.contains(k)) spark.conf.set(k, v) }
+    confs.foreach { case (k, v) =>
+      if (!spark.conf.contains(k) && !spark.conf.contains("spark.hadoop." + k)) spark.conf.set(k, v)
+    }
 
   /** Runtime registration of a SQL function. Idempotent: a name the
     * session already resolves (registered earlier, or injected by

@@ -54,4 +54,43 @@ class BloomFilterSpec extends AnyFunSuite {
       .orderBy("l_returnflag").collect().toSeq
     assert(pruned == plain)
   }
+
+  test("literal and column probes compile: no CodeGenerator error, no interpreter fallback") {
+    // xxhash64(7L) folds to a negative literal; spliced after the
+    // probe's `(Long)` cast it read as a subtraction and failed to compile
+    assert(spark.sql("SELECT xxhash64(7L) < 0").head().getBoolean(0))
+    val probes = Seq(
+      "literal" -> s"SELECT graft_bloom_contains(${bloomOf("id < 100")}, 7L)",
+      "column" -> s"SELECT graft_bloom_contains(${bloomOf("id < 100")}, id) FROM range(7, 8)")
+    for ((kind, sql) <- probes) {
+      val errors = CodegenErrors.during(assert(spark.sql(sql).head().getBoolean(0), kind))
+      assert(errors.isEmpty, s"$kind probe: ${errors.mkString("\n")}")
+    }
+  }
+}
+
+/** The ERROR lines Spark's `CodeGenerator` logs (one per generated
+  * class janino rejects) while `body` runs.
+  */
+object CodegenErrors {
+  import org.apache.logging.log4j.{Level, LogManager}
+  import org.apache.logging.log4j.core.{LogEvent, Logger}
+  import org.apache.logging.log4j.core.appender.AbstractAppender
+  import org.apache.logging.log4j.core.config.Property
+
+  def during(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-codegen-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator").asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try body
+    finally logger.removeAppender(appender)
+    seen.toArray(Array.empty[String]).toSeq
+  }
 }

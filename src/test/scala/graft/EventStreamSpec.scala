@@ -78,6 +78,19 @@ class EventStreamSpec extends AnyFunSuite {
     }
   }
 
+  test("the aggregation job parses once per row: one from_json in its optimized plan") {
+    // without the Opaque barrier the filter on originalId and the
+    // window's processedAt each get a pruned copy of the parse, on top
+    // of the full parse the projection keeps
+    val plan = graft.jobs.AggregationMain
+      .pipeline(spark.range(3).selectExpr("CAST(id AS STRING) AS value"))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect {
+      case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+    }))
+    assert(parses.size == 1, s"the aggregation parses ${parses.size} times per row:\n$plan")
+  }
+
   test("should assign per-key sequences across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
