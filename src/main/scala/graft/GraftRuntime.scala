@@ -146,6 +146,5 @@ object GraftRuntime {
     * specs that disable broadcast joins assert SortMergeJoin plans.
     */
   val ShjThreshold: (String, String) =
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m"
 }

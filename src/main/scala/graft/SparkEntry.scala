@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sf0.1).
   *
   * Build-concurrency note: query BUILDERS are assumed to run one at a
-  * time per session (Verify/Bench/Explain all iterate sequentially).
+  * time per session (Verify/Bench/PlanPeek all iterate sequentially).
   * The one builder that mutates session conf (q_agg_pushdown's V2-scan
   * window, Analytics.v2ConfLock) self-serializes, but a harness that
   * builds OTHER queries concurrently during that window could pick up

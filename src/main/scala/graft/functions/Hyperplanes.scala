@@ -11,10 +11,10 @@ import org.apache.spark.sql.types._
   *
   * Why this object exists: the original banding queries inline each
   * plane as a 64-long `typedlit` — at 128 planes that is ~1.6 MB of
-  * literal constants per plan (EXPLAIN.md's outlier), and the
-  * log-scaled band widths `dedup_embedding_wide` needs (hundreds to
-  * thousands of planes at corpus scale) would blow the codegen
-  * constant pool outright. Here the plane matrix is computed once per
+  * literal constants per plan (the outlier of the registry's
+  * formatted plan dump), and the log-scaled band widths
+  * `dedup_embedding_wide` needs (hundreds to thousands of planes at
+  * corpus scale) would blow the codegen constant pool outright. Here the plane matrix is computed once per
   * JVM from the seed formula and cached; the Catalyst expression
   * ([[HyperplaneBandVals]]) carries only two ints, so the plan stays
   * KB-sized no matter how many planes the corpus size demands, and

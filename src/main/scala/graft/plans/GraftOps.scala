@@ -220,7 +220,7 @@ object GraftOps {
     // (rank keys + the columns the consumer needs), so the cached
     // stream is narrow. (q_skyline and dedup_substring guard the same
     // hazard with an EAGER localCheckpoint(true); persist is chosen
-    // here because it keeps the builder lazy — Explain/PlanBudget can
+    // here because it keeps the builder lazy — PlanPeek/PlanBudget can
     // build the plan without running the ranking job — and is equally
     // safe under partition loss: the range bounds live in the
     // materialized RDD's partitioner, so a recomputed partition

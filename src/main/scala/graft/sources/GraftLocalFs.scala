@@ -5,8 +5,8 @@ import java.net.URI
 import java.nio.file.{FileSystems, Files}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver,
-  FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSDataInputStream,
+  FSLinkResolver, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -29,11 +29,23 @@ import org.apache.hadoop.fs.permission.FsPermission
   * from a session's Hadoop conf uses it. Code on the `FileSystem` API
   * is unaffected. `LocalFsSpec` pins parity with `LocalFs`.
   *
+  * One deliberate difference from `LocalFs`: `open(path)` verifies
+  * the `.crc` beside the file. `LocalFs` inherits `FilterFs.open(path)`,
+  * which reads the raw file, and only `open(path, bufferSize)` reaches
+  * `ChecksumFs`'s verifying reader; Spark's checkpoint manager calls
+  * the one-argument form, so under `LocalFs` a corrupted offset log or
+  * state file is read back without error.
+  *
   * `(URI, Configuration)` is the constructor `AbstractFileSystem`
   * instantiates; like `LocalFs`, it ignores the URI.
   */
 final class GraftLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new GraftLocalFs.Raw(conf))
+    extends ChecksumFs(new GraftLocalFs.Raw(conf)) {
+
+  /** `AbstractFileSystem.open(path)`: the server-default buffer size. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object GraftLocalFs {
 

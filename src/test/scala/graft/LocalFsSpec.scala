@@ -10,7 +10,7 @@ import graft.sources.GraftLocalFs
 import graft.streaming.{EventStream, ParsedEvent}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException,
-  FileContext, FsConstants, Options, Path}
+  FileContext, FSDataInputStream, FsConstants, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[GraftLocalFs]], the `file://` `AbstractFileSystem` of graft
   * sessions: the same modes, link statuses, rename and checksum
   * behaviour as Hadoop's `LocalFs`, with no process forked by a
-  * streaming checkpoint.
+  * streaming checkpoint, and with `open(path)` verifying checksums,
+  * which `LocalFs` skips.
   */
 class LocalFsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -150,17 +151,23 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a corrupted file still fails its checksum") {
-    perFs { (fc, d) =>
+    def readAll(in: FSDataInputStream): Unit =
+      try in.readFully(new Array[Byte](4096)) finally in.close()
+    val oneArg = perFs { (fc, d) =>
       write(fc, s"$d/f", Array.tabulate[Byte](4096)(_.toByte))
       val raw = Paths.get(s"$d/f")
       val bytes = Files.readAllBytes(raw)
       bytes(100) = (bytes(100) ^ 1).toByte
       Files.write(raw, bytes)
-      // with a buffer size: FilterFs.open(path) skips ChecksumFs's reader
-      val in = fc.open(new Path(s"$d/f"), 4096)
-      try intercept[ChecksumException](in.readFully(new Array[Byte](4096)))
-      finally in.close()
+      intercept[ChecksumException](readAll(fc.open(new Path(s"$d/f"), 4096)))
+      // open(path) is the call Spark's checkpoint manager makes
+      try { readAll(fc.open(new Path(s"$d/f"))); "read" }
+      catch { case _: ChecksumException => "ChecksumException" }
     }
+    assert(oneArg("graft") == "ChecksumException")
+    // LocalFs inherits FilterFs.open(path), which reads the raw file
+    // and skips ChecksumFs's verifying reader
+    assert(oneArg("stock") == "read")
   }
 
   private val rawSchema = StructType(Seq(StructField("value", StringType)))
