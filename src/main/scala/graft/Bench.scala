@@ -1,6 +1,10 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Driver-run benchmark: every registered query on
@@ -45,13 +49,12 @@ object Bench {
     * is only the BOOTSTRAP: the committed level self-re-pins from the
     * artifact lineage (`canary_lineage.jsonl`, the MIN of the last
     * [[CanaryLineageN]] window medians at the same core count —
-    * see [[resolveCommitted]]), so a hardware change needs at most one
-    * manual SPARK_GRAFT_CANARY_COMMITTED pin (or, off 32 cores, none:
-    * the first flag-off run seeds the lineage) instead of a constant
-    * edit per fleet change. Pinned to the IN-BENCH calm level, not the
-    * idle level: mid/end samples inherit the bench's own residual GC
-    * pressure, which is part of every calm window and must not read
-    * as external load. Measured r13 on an idle box (load 4/32, only
+    * see [[resolveCommitted]]), so a hardware change needs no constant
+    * edit: the first window at a core count seeds the lineage there.
+    * Pinned to the IN-BENCH calm level, not the idle level: mid/end
+    * samples inherit the bench's own residual GC pressure, which is
+    * part of every calm window and must not read as external load.
+    * Measured r13 on an idle box (load 4/32, only
     * the bench JVM): full-registry window medians 0.549/0.583 s
     * (per-sample 0.39-0.61; start samples run cooler — they follow
     * only the warmup); idle-JVM medians for reference: 0.39-0.45 s.
@@ -120,13 +123,29 @@ object Bench {
     * (`SPARK_DRIVER_MEM` unset): every historical window ran at the
     * default, so legacy lines are default-heap lines.
     */
-  private[graft] def heapMatches(line: String, currentHeapMb: Long,
+  private[graft] def heapMatches(entry: JsonNode, currentHeapMb: Long,
       currentIsDefault: Boolean): Boolean =
-    """"heap_mb":([0-9]+)""".r.findFirstMatchIn(line)
-      .map(_.group(1).toLong) match {
+    number(entry, "heap_mb").map(_.toLong) match {
       case Some(h) => h == currentHeapMb
       case None => currentIsDefault
     }
+
+  /** The lineage entries at core count `cpus`, oldest first. A line
+    * that is not one JSON value is skipped: a crash mid-append leaves
+    * a torn trailing line, and its fragment (`"median":0.`) must never
+    * enter a min pool and pin a level at zero.
+    */
+  private def lineageAt(lineage: Path, cpus: String): Seq[JsonNode] =
+    readLineage(lineage).flatMap(Json.parse)
+      .filter(_.path("cpus").asText == cpus)
+
+  private def readLineage(lineage: Path): Seq[String] =
+    if (Files.exists(lineage)) Files.readAllLines(lineage).asScala.toSeq
+    else Seq.empty
+
+  /** A numeric field of a lineage entry; absent or null reads None. */
+  private def number(entry: JsonNode, field: String): Option[Double] =
+    Option(entry.get(field)).filter(_.isNumber).map(_.asDouble)
 
   /** Whether this JVM runs at the build-default heap. `SPARK_DRIVER_MEM`
     * is the only lever that moves the test/run fork's -Xmx (build.sbt),
@@ -139,9 +158,9 @@ object Bench {
     "SPARK_GRAFT_CANARY_IO_DIR", "target/canary_io_fixture.parquet")
 
   /** Committed calm level + its provenance, resolved in order:
-    * explicit env pin > MINIMUM of the last [[CanaryLineageN]] window
-    * medians at the same core count from the lineage sidecar > the
-    * local[32] bootstrap constant > disabled.
+    * MINIMUM of the last [[CanaryLineageN]] window medians at the same
+    * core count from the lineage sidecar > the local[32] bootstrap
+    * constant > disabled.
     *
     * Min, not median, and over ALL recent windows, not just
     * calm-flagged ones (r14 review, two findings): a median of
@@ -160,61 +179,42 @@ object Bench {
     * after N windows (the old fast minima age out).
     */
   private[graft] def resolveCommitted(cpus: String,
-      lineage: java.nio.file.Path = lineagePath,
-      pin: Option[Double] =
-        sys.env.get("SPARK_GRAFT_CANARY_COMMITTED").map(_.toDouble),
+      lineage: Path = lineagePath,
       currentHeapMb: Long = heapMb,
       currentIsDefault: Boolean = defaultHeapNow)
       : (Option[Double], String) =
-    resolveLevel(cpus, lineage, pin, "median", CanaryCommittedSec,
+    resolveLevel(cpus, lineage, "median", CanaryCommittedSec,
       currentHeapMb, currentIsDefault)
 
-  /** The IO axis' committed level — same pin > lineage-min > bootstrap
+  /** The IO axis' committed level — same lineage-min > bootstrap
     * lattice over the `median_io` lineage field. Pre-r15 lineage lines
     * carry no `median_io` and simply don't contribute, so the axis
-    * bootstraps from the constant (or its own pin) until the lineage
-    * accumulates post-r15 windows.
+    * bootstraps from the constant until the lineage accumulates
+    * post-r15 windows.
     */
   private[graft] def resolveCommittedIo(cpus: String,
-      lineage: java.nio.file.Path = lineagePath,
-      pin: Option[Double] =
-        sys.env.get("SPARK_GRAFT_CANARY_COMMITTED_IO").map(_.toDouble),
+      lineage: Path = lineagePath,
       currentHeapMb: Long = heapMb,
       currentIsDefault: Boolean = defaultHeapNow)
       : (Option[Double], String) =
-    resolveLevel(cpus, lineage, pin, "median_io", CanaryIoCommittedSec,
+    resolveLevel(cpus, lineage, "median_io", CanaryIoCommittedSec,
       currentHeapMb, currentIsDefault)
 
-  private def resolveLevel(cpus: String, lineage: java.nio.file.Path,
-      pin: Option[Double], field: String, bootstrap32: Double,
-      currentHeapMb: Long, currentIsDefault: Boolean)
-      : (Option[Double], String) =
-    pin match {
-      case Some(p) => (Some(p), "pinned")
-      case None =>
-        val medians =
-          if (!java.nio.file.Files.exists(lineage)) Seq.empty
-          else scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(lineage)).asScala.toSeq
-            // a torn trailing line (crash mid-append) must not enter
-            // the pool: `"median":0.` would regex-parse as 0.0 and the
-            // MIN would pin the level at zero, flagging every window
-            // for the next N runs (r14 advice). A complete entry ends
-            // with '}' and carries a strictly positive median. The
-            // heap key (r16) keeps 8g and 96g windows apart — see
-            // [[heapMatches]].
-            .filter(l => l.endsWith("}") && l.contains(s""""cpus":$cpus,""") &&
-              heapMatches(l, currentHeapMb, currentIsDefault))
-            .flatMap { l =>
-              ("\"" + field + "\":([0-9.]+)").r.findFirstMatchIn(l)
-                .map(_.group(1).toDouble)
-            }
-            .filter(_ > 0.0)
-        if (medians.nonEmpty)
-          (Some(medians.takeRight(CanaryLineageN).min), "derived")
-        else if (cpus == "32") (Some(bootstrap32), "default")
-        else (None, "off")
-    }
+  private def resolveLevel(cpus: String, lineage: Path, field: String,
+      bootstrap32: Double, currentHeapMb: Long, currentIsDefault: Boolean)
+      : (Option[Double], String) = {
+    // only strictly positive medians enter: a zero level would flag
+    // every window for the next N runs (r14 advice). The heap key
+    // (r16) keeps 8g and 96g windows apart — see [[heapMatches]].
+    val medians = lineageAt(lineage, cpus)
+      .filter(heapMatches(_, currentHeapMb, currentIsDefault))
+      .flatMap(number(_, field))
+      .filter(_ > 0.0)
+    if (medians.nonEmpty)
+      (Some(medians.takeRight(CanaryLineageN).min), "derived")
+    else if (cpus == "32") (Some(bootstrap32), "default")
+    else (None, "off")
+  }
 
   /** EITHER-axis flag decision + attribution: `(inflated, axis)` where
     * axis names what fired (`"cpu"`, `"io"`, `"cpu+io"`). An axis with
@@ -240,17 +240,19 @@ object Bench {
 
   /** Bound the lineage sidecar on append: keep the newest
     * [[CanaryLineageKeep]] entries PER CORE COUNT (other counts'
-    * history must not be evicted by a busy one), preserving order.
+    * history must not be evicted by a busy one), preserving order. A
+    * line that is not one JSON value (a torn write) is dropped, as
+    * every reader skips it.
     */
   private[graft] def trimLineage(lines: Seq[String],
       keep: Int = CanaryLineageKeep): Seq[String] = {
-    def cpusOf(l: String): String =
-      """"cpus":([0-9]+)""".r.findFirstMatchIn(l).map(_.group(1)).getOrElse("?")
+    val entries = lines.flatMap(l =>
+      Json.parse(l).map(e => (l, e.path("cpus").asText)))
     // select by INDEX, not line content — two windows can serialize to
     // identical lines, and a content set would evict keepers too
-    val keepIdx = lines.zipWithIndex.groupBy { case (l, _) => cpusOf(l) }
+    val keepIdx = entries.zipWithIndex.groupBy { case ((_, c), _) => c }
       .flatMap { case (_, ls) => ls.takeRight(keep).map(_._2) }.toSet
-    lines.zipWithIndex.collect { case (l, i) if keepIdx(i) => l }
+    entries.zipWithIndex.collect { case ((l, _), i) if keepIdx(i) => l }
   }
 
   /** Per-query lineage floors (r15 verdict #1): the two-axis canary
@@ -271,25 +273,17 @@ object Bench {
     * byte-identical rerun. Returns (floors, windowsContributing).
     */
   private[graft] def resolveQueryFloors(cpus: String,
-      lineage: java.nio.file.Path = lineagePath,
+      lineage: Path = lineagePath,
       currentHeapMb: Long = heapMb,
       currentIsDefault: Boolean = defaultHeapNow)
       : (Map[String, Double], Int, String) = {
-    val qMinsRe = """"q_mins":\{([^{}]*)\}""".r
-    val pairRe = """"([^"]+)":([0-9.]+)""".r
-    val lines =
-      if (!java.nio.file.Files.exists(lineage)) Seq.empty
-      else scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(lineage)).asScala.toSeq
-        // same torn-line guard as resolveLevel: a crash mid-write must
-        // not contribute a truncated q_mins fragment
-        .filter(l => l.endsWith("}") && l.contains(s""""cpus":$cpus,"""))
-    def floorsOf(pool: Seq[String]): (Map[String, Double], Int) = {
+    val lines = lineageAt(lineage, cpus)
+    def floorsOf(pool: Seq[JsonNode]): (Map[String, Double], Int) = {
       val maps = pool
-        .flatMap(l => qMinsRe.findFirstMatchIn(l).map(_.group(1)))
+        .flatMap(e => Option(e.get("q_mins")).filter(_.isObject))
         .takeRight(CanaryLineageN)
-        .map(body => pairRe.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble)
+        .map(qMins => qMins.properties.asScala
+          .flatMap(f => number(qMins, f.getKey).map(f.getKey -> _))
           .filter(_._2 > 0.0).toMap)
       (maps.flatten.groupMapReduce(_._1)(_._2)(math.min), maps.size)
     }
@@ -332,6 +326,50 @@ object Bench {
         joined.map { case (q, t, f) => (q, t / f) })
     }
   }
+
+  /** One query's window result: best-of-reps (seconds, shuffle bytes,
+    * spill bytes), -1s when every rep failed, and every rep's seconds
+    * in its slot (None for a failed rep).
+    */
+  private type Result = (String, (Double, Long, Long), Seq[Option[Double]])
+
+  private def d3(x: Double) = Json.fixed(x, 3)
+  private def d2(x: Double) = Json.fixed(x, 2)
+
+  /** One canary axis of a window: its start/mid/end samples (-1 for a
+    * sample that never ran), their median, and the committed level
+    * the median is judged against — None when no level resolves, and
+    * then the axis cannot fire.
+    */
+  private[graft] final case class Axis(samples: Seq[Double],
+      committed: Option[Double], provenance: String, threshold: Double) {
+    val median: Double = {
+      val v = samples.filter(_ >= 0).sorted
+      v(v.size / 2)
+    }
+    def ratio: Option[Double] = committed.map(median / _)
+    def inflated: Option[Boolean] = ratio.map(_ > threshold)
+    def json: ListMap[String, Any] = Json.obj("start" -> d3(samples(0)),
+      "mid" -> d3(samples(1)), "end" -> d3(samples(2)),
+      "median" -> d3(median), "committed" -> committed.map(d3),
+      "ratio" -> ratio.map(d2), "inflated" -> inflated,
+      "provenance" -> provenance)
+  }
+
+  /** One window's lineage line: the core count and heap it ran at,
+    * both canary axes, and every successful query's best-of-reps
+    * seconds (`q_mins`) — what [[resolveCommitted]],
+    * [[resolveCommittedIo]] and [[resolveQueryFloors]] read back.
+    */
+  private[graft] def lineageEntry(cpus: String, heapMb: Long, cpu: Axis,
+      io: Axis, qMins: Seq[(String, Double)]): String =
+    Json.write(Json.obj("cpus" -> cpus.toInt, "heap_mb" -> heapMb,
+      "median" -> d3(cpu.median), "committed" -> cpu.committed.map(d3),
+      "ratio" -> cpu.ratio.map(d2), "inflated" -> cpu.inflated,
+      "median_io" -> d3(io.median), "committed_io" -> io.committed.map(d3),
+      "ratio_io" -> io.ratio.map(d2), "inflated_io" -> io.inflated,
+      "provenance" -> cpu.provenance, "provenance_io" -> io.provenance,
+      "q_mins" -> ListMap.from(qMins.map { case (q, t) => q -> d3(t) })))
 
   /** Ratio above which the window is flagged inflated — 1.5x clears
     * normal scheduler jitter (calm samples vary < 1.2x) while every
@@ -547,34 +585,10 @@ object Bench {
     // window (their history and steering stay alive) but report in a
     // separate `baseline` object, not the headline maps: the headline
     // is what a user following the steering would actually pay.
-    val baselineNames = results.collect {
-      case (k, _, _) if SparkEntry.defsByName(k).supersededBy.nonEmpty => k
-    }.toSet
-    val (blResults, hlResults) =
-      results.partition { case (k, _, _) => baselineNames.contains(k) }
-    val qs = hlResults.map { case (k, (t, _, _), _) => "\"" + k + "\":" + t }
-      .mkString("{", ",", "}")
-    val shuffles = hlResults.map { case (k, (_, sh, _), _) => "\"" + k + "\":" + sh }
-      .mkString("{", ",", "}")
-    val spills = hlResults.map { case (k, (_, _, sp), _) => "\"" + k + "\":" + sp }
-      .mkString("{", ",", "}")
-    // the lane keeps the FULL telemetry shape (reps/shuffle/spill) —
-    // the r8 per-rep-traces-in-the-artifact rule applies to both
-    // lanes; only the headline membership changes (r14 review)
-    val baselineJson = {
-      val bq = blResults.map { case (k, (t, _, _), _) => "\"" + k + "\":" + t }
-        .mkString("{", ",", "}")
-      val bSh = blResults.map { case (k, (_, sh, _), _) => "\"" + k + "\":" + sh }
-        .mkString("{", ",", "}")
-      val bSp = blResults.map { case (k, (_, _, sp), _) => "\"" + k + "\":" + sp }
-        .mkString("{", ",", "}")
-      val bReps = blResults.map { case (k, _, rs) =>
-        "\"" + k + "\":" +
-          rs.map(_.map(_.toString).getOrElse("null")).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val bTotal = blResults.collect { case (_, (v, _, _), _) if v >= 0 => v }.sum
-      s"""{"queries":$bq,"total":$bTotal,"shuffle_bytes":$bSh,"spill_bytes":$bSp,"reps":$bReps}"""
-    }
+    val (blResults, hlResults) = results.partition { case (k, _, _) =>
+      SparkEntry.defsByName(k).supersededBy.nonEmpty }
+    def laneTotal(lane: Seq[Result]) =
+      lane.collect { case (_, (v, _, _), _) if v >= 0 => v }.sum
     // Per-rep traces IN the artifact (r8 verdict, bench-evidence
     // hygiene): the round-to-round drift analyses kept reconstructing
     // rep-1-codegen vs sustained-slowness from stderr scrollback; the
@@ -584,77 +598,57 @@ object Bench {
     // has exactly `reps` slots; a failed rep is a literal JSON `null`
     // in its slot so partial failures stay visible in the artifact —
     // consumers must tolerate nulls when treating reps as numeric.
-    val repsJson = hlResults.map { case (k, _, rs) =>
-      "\"" + k + "\":" +
-        rs.map(_.map(_.toString).getOrElse("null")).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    // The baseline lane keeps the FULL telemetry shape (reps/shuffle/
+    // spill) — the r8 rule applies to both lanes; only the headline
+    // membership changes (r14 review). `second` is the key a lane's
+    // object carries after `queries`.
+    def laneJson(lane: Seq[Result], second: (String, Any)) = Json.obj(
+      "queries" -> ListMap.from(lane.map { case (k, (t, _, _), _) => k -> t }),
+      second,
+      "shuffle_bytes" -> ListMap.from(lane.map { case (k, (_, b, _), _) => k -> b }),
+      "spill_bytes" -> ListMap.from(lane.map { case (k, (_, _, b), _) => k -> b }),
+      "reps" -> ListMap.from(lane.map { case (k, _, rs) => k -> rs }))
     // canary sample 3: window END. Median-of-3 vs the committed calm
     // level decides the flag (median: a single spiky sample means a
     // transient, not a whole inflated window — the per-sample values
     // stay in the artifact for exactly that attribution).
     val canaryEnd = runCanary(spark)
     val canaryIoEnd = runCanaryIo(spark, ioFixture)
-    def median3(s: Seq[Double]): Double = {
-      val v = s.filter(_ >= 0)
-      v.sorted.apply(v.size / 2)
-    }
-    val canaryMedian = median3(Seq(canaryStart, canaryMid, canaryEnd))
-    val canaryIoMedian = median3(Seq(canaryIoStart, canaryIoMid, canaryIoEnd))
     // The committed levels scale with cores, so a level is only in
-    // force when one resolves for THIS core count (pin > lineage >
-    // local[32] bootstrap constant — see resolveCommitted); otherwise
-    // that axis stays off and its samples still land in the artifact
-    // (and seed the lineage for the next run here).
-    val (committedOpt, provenance) = resolveCommitted(cpus)
-    val (committedIoOpt, provenanceIo) = resolveCommittedIo(cpus)
-    // Locale-pinned decimal formatting (r14 review): the f-interpolator
-    // follows the default locale, and a comma-decimal JVM (de_DE, ...)
-    // would write "median":0,710 — invalid JSON that resolveCommitted's
-    // dot-decimal regex would misread as 0, flagging every window
-    // inflated against a zero level forever.
-    def d3(x: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-    def d2(x: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
-    val cpuRatio = committedOpt.map(canaryMedian / _)
-    val ioRatio = committedIoOpt.map(canaryIoMedian / _)
-    val (inflatedOpt, axisOpt) = flagAxes(cpuRatio, ioRatio)
+    // force when one resolves for THIS core count (lineage > local[32]
+    // bootstrap constant — see resolveCommitted); otherwise that axis
+    // stays off and its samples still land in the artifact (and seed
+    // the lineage for the next run here).
+    val cpu = {
+      val (level, provenance) = resolveCommitted(cpus)
+      Axis(Seq(canaryStart, canaryMid, canaryEnd), level, provenance,
+        CanaryInflatedRatio)
+    }
+    val io = {
+      val (level, provenance) = resolveCommittedIo(cpus)
+      Axis(Seq(canaryIoStart, canaryIoMid, canaryIoEnd), level, provenance,
+        CanaryIoInflatedRatio)
+    }
+    val (inflatedOpt, axisOpt) = flagAxes(cpu.ratio, io.ratio)
     if (inflatedOpt.contains(true)) System.err.println(
       s"[bench] WINDOW INFLATED (axis: ${axisOpt.get}): cpu canary median " +
-        s"${d3(canaryMedian)} s = ${cpuRatio.map(d2).getOrElse("n/a")}x " +
-        s"committed (${committedOpt.map(d3).getOrElse("n/a")}, $provenance); " +
-        s"io canary median ${d3(canaryIoMedian)} s = " +
-        s"${ioRatio.map(d2).getOrElse("n/a")}x committed " +
-        s"(${committedIoOpt.map(d3).getOrElse("n/a")}, $provenanceIo) - " +
+        s"${d3(cpu.median)} s = ${cpu.ratio.map(d2).getOrElse("n/a")}x " +
+        s"committed (${cpu.committed.map(d3).getOrElse("n/a")}, ${cpu.provenance}); " +
+        s"io canary median ${d3(io.median)} s = " +
+        s"${io.ratio.map(d2).getOrElse("n/a")}x committed " +
+        s"(${io.committed.map(d3).getOrElse("n/a")}, ${io.provenance}) - " +
         "treat per-query regressions in this artifact as suspect " +
         "(io-axis flags hit the shuffle-heavy queries hardest)")
     if (inflatedOpt.isEmpty) System.err.println(
       s"[bench] canary flag disabled: no committed calm level resolves for " +
-        s"local[$cpus] on either axis (no pin, no lineage at this core " +
-        "count) - this run's medians seed the lineage; set " +
-        "SPARK_GRAFT_CANARY_COMMITTED / _IO to arm the flag immediately")
+        s"local[$cpus] on either axis (no lineage at this core count) - " +
+        "this run's medians seed the lineage")
     // Per-axis objects + the either-axis flag and attribution (r14
     // What's-wrong 1: the CPU-only canary read 0.97x calm on a +22%
     // IO-pressured window; the artifact now carries both axes and
     // names which fired). Axis fields are NULLABLE like before.
-    def axisJson(start: Double, mid: Double, end: Double, med: Double,
-        committed: Option[Double], ratio: Option[Double], threshold: Double,
-        prov: String): String = {
-      val c = committed.map(d3).getOrElse("null")
-      val r = ratio.map(d2).getOrElse("null")
-      val infl = ratio.map(x => (x > threshold).toString).getOrElse("null")
-      s"""{"start":${d3(start)},"mid":${d3(mid)},"end":${d3(end)},"median":${d3(med)},"committed":$c,"ratio":$r,"inflated":$infl,"provenance":"$prov"}"""
-    }
-    val canaryJson = {
-      val cpuJ = axisJson(canaryStart, canaryMid, canaryEnd, canaryMedian,
-        committedOpt, cpuRatio, CanaryInflatedRatio, provenance)
-      val ioJ = axisJson(canaryIoStart, canaryIoMid, canaryIoEnd,
-        canaryIoMedian, committedIoOpt, ioRatio, CanaryIoInflatedRatio,
-        provenanceIo)
-      val infl = inflatedOpt.map(_.toString).getOrElse("null")
-      val axis = axisOpt.map("\"" + _ + "\"").getOrElse("null")
-      s"""{"cpu":$cpuJ,"io":$ioJ,"inflated":$infl,"axis":$axis}"""
-    }
+    val canaryJson = Json.obj("cpu" -> cpu.json, "io" -> io.json,
+      "inflated" -> inflatedOpt, "axis" -> axisOpt)
     // Append this window to the lineage sidecar (full-registry runs
     // only — a filtered run's GC/cache profile is not a calm-window
     // comparable). Every window is appended, hot or calm — the
@@ -670,56 +664,47 @@ object Bench {
       val windowTimes = results.map { case (k, (t, _, _), _) => (k, t) }
       val (floorTotalOpt, windowVsFloorOpt, ratios) =
         floorReport(windowTimes, floors)
-      val rj = ratios.sortBy(_._1)
-        .map { case (q, r) => "\"" + q + "\":" + d2(r) }
-        .mkString("{", ",", "}")
-      s"""{"total":${floorTotalOpt.map(d3).getOrElse("null")},"window_vs_floor":${windowVsFloorOpt.map(d2).getOrElse("null")},"windows":$floorWindows,"provenance":"$floorProvenance","queries":$rj}"""
+      Json.obj("total" -> floorTotalOpt.map(d3),
+        "window_vs_floor" -> windowVsFloorOpt.map(d2),
+        "windows" -> floorWindows, "provenance" -> floorProvenance,
+        "queries" -> ListMap.from(ratios.sortBy(_._1)
+          .map { case (q, r) => q -> d2(r) }))
     }
     if (filter.isEmpty) {
-      def optJson(o: Option[Double], f: Double => String): String =
-        o.map(f).getOrElse("null")
       // per-query best-of-reps across BOTH lanes — the floor source
       // for future windows at this core count
-      val qMinsJson = results.collect {
-        case (k, (t, _, _), _) if t >= 0 => "\"" + k + "\":" + d3(t)
-      }.mkString("{", ",", "}")
-      val entry =
-        s"""{"cpus":$cpus,"heap_mb":$heapMb,"median":${d3(canaryMedian)},"committed":${optJson(committedOpt, d3)},"ratio":${optJson(cpuRatio, d2)},"inflated":${cpuRatio.map(r => (r > CanaryInflatedRatio).toString).getOrElse("null")},"median_io":${d3(canaryIoMedian)},"committed_io":${optJson(committedIoOpt, d3)},"ratio_io":${optJson(ioRatio, d2)},"inflated_io":${ioRatio.map(r => (r > CanaryIoInflatedRatio).toString).getOrElse("null")},"provenance":"$provenance","provenance_io":"$provenanceIo","q_mins":$qMinsJson}"""
-      val existing =
-        if (java.nio.file.Files.exists(lineagePath))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(lineagePath)).asScala.toSeq
-            .filter(_.nonEmpty)
-        else Seq.empty
-      val trimmed = trimLineage(existing :+ entry)
+      val qMins = results.collect { case (k, (t, _, _), _) if t >= 0 => (k, t) }
+      val trimmed = trimLineage(readLineage(lineagePath) :+
+        lineageEntry(cpus, heapMb, cpu, io, qMins))
       // Atomic replace (r15 advice): the in-place truncate-and-write
       // could lose the whole history on a crash mid-write, and two
       // concurrent runs sharing the sidecar would read-modify-write
       // over each other. A sibling temp file + ATOMIC_MOVE bounds the
       // damage to losing ONE run's single appended entry.
       val dir = lineagePath.toAbsolutePath.getParent
-      val tmp = java.nio.file.Files.createTempFile(dir, ".canary_lineage", ".tmp")
-      java.nio.file.Files.write(tmp,
-        trimmed.mkString("", "\n", "\n").getBytes("UTF-8"))
-      try java.nio.file.Files.move(tmp, lineagePath.toAbsolutePath,
+      val tmp = Files.createTempFile(dir, ".canary_lineage", ".tmp")
+      Files.write(tmp, trimmed.mkString("", "\n", "\n").getBytes("UTF-8"))
+      try Files.move(tmp, lineagePath.toAbsolutePath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       catch {
         case _: java.nio.file.AtomicMoveNotSupportedException =>
-          java.nio.file.Files.move(tmp, lineagePath.toAbsolutePath,
+          Files.move(tmp, lineagePath.toAbsolutePath,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
 
-    // headline total excludes the baseline lane (reported separately)
-    val total = hlResults.collect { case (_, (v, _, _), _) if v >= 0 => v }.sum
-    // failures surfaced explicitly ACROSS BOTH LANES: a broken query
+    // headline total excludes the baseline lane (reported separately);
+    // failures are surfaced explicitly ACROSS BOTH LANES: a broken query
     // must not read as a smaller (better) total, and a baseline-lane
     // break must not hide either
-    val failed = results.collect { case (k, (v, _, _), _) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"shuffle_bytes":$shuffles,"spill_bytes":$spills,"reps":$repsJson,"baseline":$baselineJson,"canary":$canaryJson,"floor":$floorJson,"sf":"$sfDir"}"""
+    val line = Json.write(Json.obj("metric" -> "total",
+      "value" -> laneTotal(hlResults), "unit" -> "sec") ++
+      laneJson(hlResults,
+        "failed" -> results.collect { case (k, (v, _, _), _) if v < 0 => k }) ++
+      Json.obj("baseline" ->
+        laneJson(blResults, "total" -> laneTotal(blResults)),
+        "canary" -> canaryJson, "floor" -> floorJson, "sf" -> sfDir))
     println(line)
     // Also persist next to the repo: the driver captures stdout tails,
     // which has truncated the per-query map before — the file is the
@@ -729,7 +714,7 @@ object Bench {
     if (filter.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
       val out = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_local.json"))
-      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+      Files.write(out, (line + "\n").getBytes("UTF-8"))
     }
     spark.stop()
   }

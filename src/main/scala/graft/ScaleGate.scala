@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Scale-tier INVARIANT gate — the mechanization of SCALE100's family
   * laws (r13 verdict: the 11th-decile AQE mis-ranking was invisible to
@@ -35,7 +36,28 @@ import org.apache.spark.sql.functions._
 object ScaleGate {
 
   final case class Check(query: String, invariant: String, pass: Boolean,
-      detail: String)
+      detail: String) {
+    /** The artifact form where the enclosing report names the query,
+      * or has none.
+      */
+    def entry: ListMap[String, Any] =
+      Json.obj("invariant" -> invariant, "pass" -> pass, "detail" -> detail)
+  }
+
+  /** The shared ending of the self-checking mains (this gate,
+    * [[ScaleStream]], `LocalPipelineMain`, `LocalCorpusPipelineMain`):
+    * print `report` as one JSON line, copy it to the file `out` names,
+    * stop Spark, and exit 1 if any check failed.
+    */
+  private[graft] def finish(spark: SparkSession, report: Any,
+      checks: Seq[Check], out: Option[String] = None): Unit = {
+    val line = Json.write(report)
+    println(line)
+    out.foreach(p => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(p), line + "\n"))
+    spark.stop()
+    if (checks.exists(!_.pass)) sys.exit(1)
+  }
 
   private def ok(q: String, inv: String, detail: String = "") =
     Check(q, inv, pass = true, detail)
@@ -1506,9 +1528,8 @@ object ScaleGate {
           case "mix_kl" => checkMixKl(spark, baseDir, scaledDir, copies)
           case "pipeline_curate" => checkCurate(spark, scaledDir)
           case "pipeline_curate_emb" => checkCurateEmb(spark, scaledDir)
-          case "pipeline_shard" => operators.Curate.shardChecksFor(
-            spark, scaledDir).map { case (inv, pass, det) =>
-              check(q, inv, pass, det) }
+          case "pipeline_shard" =>
+            operators.Curate.shardChecksFor(spark, scaledDir)
           case "sample_split_hash" =>
             val out = SparkEntry.queries(q)(spark, scaledDir)
             idSetLaw(q, out, corpusIds(spark, scaledDir), complete = true) +:
@@ -1653,31 +1674,9 @@ object ScaleGate {
       System.err.println(
         s"[gate] ${if (c.pass) "PASS" else "FAIL"} ${c.query}: ${c.invariant}" +
           (if (c.detail.nonEmpty) s" (${c.detail})" else "")))
-    // Full JSON string escape incl. control chars (r14 review): the
-    // failure path puts e.getMessage into detail, and Spark exception
-    // messages are routinely multi-line - a raw newline would make the
-    // artifact unparseable exactly when it carries failure evidence
-    // (the Verify.q escaper rule).
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json = checks.map(c =>
-      s"""{"query":"${c.query}","invariant":"${esc(c.invariant)}","pass":${c.pass},"detail":"${esc(c.detail)}"}""")
-      .mkString(
-        s"""{"copies":$copies,"base":"$src","scaled":"$out","n_checks":${checks.size},"n_failed":${checks.count(!_.pass)},"checks":[""",
-        ",\n", "]}")
-    println(json)
-    sys.env.get("SPARK_GRAFT_GATE_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (json + "\n").getBytes("UTF-8"))
-    }
-    spark.stop()
-    if (checks.exists(!_.pass)) sys.exit(1)
+    finish(spark, Json.obj("copies" -> copies, "base" -> src, "scaled" -> out,
+      "n_checks" -> checks.size, "n_failed" -> checks.count(!_.pass),
+      "checks" -> checks.map(c => Json.obj("query" -> c.query) ++ c.entry)),
+      checks, sys.env.get("SPARK_GRAFT_GATE_OUT"))
   }
 }

@@ -290,33 +290,17 @@ object ScaleStream {
         ScaleStreamState.runAll(spark, scaledDir, copies, slices, work, onLoop)
       else Seq.empty)
 
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val allChecks = results.flatMap(_.checks)
-    val json = results.map { r =>
-      val batches = r.perBatchMs.map { case (id, n, ms) =>
-        s"""{"batch":$id,"rows":$n,"ms":$ms}""" }.mkString("[", ",", "]")
-      val checks = r.checks.map(c =>
-        s"""{"invariant":"${esc(c.invariant)}","pass":${c.pass},"detail":"${esc(c.detail)}"}""")
-        .mkString("[", ",", "]")
-      s"""{"loop":"${r.loop}","copies":${r.copies},"arrivals":${r.arrivals},"batches":${r.batches},"wall_sec":${String.format(java.util.Locale.ROOT, "%.1f", Double.box(r.wallSec))},"per_batch":$batches,"checks":$checks}"""
-    }.mkString(
-      s"""{"copies":$copies,"slices":$slices,"scaled":"$scaledDir","n_checks":${allChecks.size},"n_failed":${allChecks.count(!_.pass)},"loops":[""",
-      ",\n", "]}")
-    println(json)
-    sys.env.get("SPARK_GRAFT_STREAM_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (json + "\n").getBytes("UTF-8"))
-    }
-    spark.stop()
-    if (allChecks.exists(!_.pass)) sys.exit(1)
+    ScaleGate.finish(spark, Json.obj("copies" -> copies, "slices" -> slices,
+      "scaled" -> scaledDir, "n_checks" -> allChecks.size,
+      "n_failed" -> allChecks.count(!_.pass),
+      "loops" -> results.map(r => Json.obj("loop" -> r.loop,
+        "copies" -> r.copies, "arrivals" -> r.arrivals,
+        "batches" -> r.batches, "wall_sec" -> Json.fixed(r.wallSec, 1),
+        "per_batch" -> r.perBatchMs.map { case (id, n, ms) =>
+          Json.obj("batch" -> id, "rows" -> n, "ms" -> ms) },
+        "checks" -> r.checks.map(_.entry)))),
+      allChecks, sys.env.get("SPARK_GRAFT_STREAM_OUT"))
   }
 
   /** The three loops, shared by the main (100x) and ScaleStreamSpec

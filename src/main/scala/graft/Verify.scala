@@ -21,6 +21,7 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown query names in filter: ${unknown.mkString(", ")}")
     }
+    val dumped = (name: String) => only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the same SMJ->SHJ bound as Bench, so correctness verifies the
     // plans the bench actually executes
@@ -32,7 +33,7 @@ object Verify {
       f.delete()
     }
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => dumped(name) }
       .foreach { case (name, fn) =>
       // drop any previous dump first: a query failing before its
       // write must leave NO output, not a stale one the oracle
@@ -59,28 +60,12 @@ object Verify {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql.filter { case (k, _) => dumped(k) }))
     // full expected-query manifest so the checker can flag a
     // rows-only query that silently stopped producing output
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      SparkEntry.queries.keys.toSeq.sorted
-        .filter(k => only.forall(_.contains(k)))
-        .map(q).mkString("[", ",", "]"))
+      Json.write(SparkEntry.queries.keys.toSeq.sorted.filter(dumped)))
     spark.stop()
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.{Json, ScaleGate}
+import graft.ScaleGate.Check
 import graft.streaming.{EventStream, ParsedEvent}
 
 /** Cluster entrypoints for the k8s manifests (k8s/graft-job.yaml) —
@@ -179,10 +181,12 @@ object AggregationMain {
 object LocalPipelineMain {
 
   final case class Summary(generated: Long, valid: Long, errors: Long,
-    metricsRows: Long, stateRows: Long,
-    checks: Seq[(String, Boolean, String)])
+    metricsRows: Long, stateRows: Long, checks: Seq[Check])
 
   private val FlushId = "watermark-flush"
+
+  private def check(inv: String, pass: Boolean, detail: String) =
+    Check("local_pipeline", inv, pass, detail)
 
   def run(spark: SparkSession, base: String, rows: Long): Summary = {
     import org.apache.spark.sql.streaming.Trigger
@@ -320,13 +324,13 @@ object LocalPipelineMain {
         col("sequence") =!= col("n") || col("mx") =!= col("n")).count()
     streamed.unpersist(); batchMetrics.unpersist(); state.unpersist()
     val checks = Seq(
-      ("routing conservation: valid + errors = generated",
+      check("routing conservation: valid + errors = generated",
         valid + errors == generated,
         s"valid=$valid errors=$errors generated=$generated"),
-      ("streamed metrics equal the batch recomputation over closed windows",
+      check("streamed metrics equal the batch recomputation over closed windows",
         metricsRows > 0 && mismatched == 0,
         s"streamed=$metricsRows mismatched_or_unmatched=$mismatched"),
-      ("latest-state upsert: one row per user, sequence = that user's event count",
+      check("latest-state upsert: one row per user, sequence = that user's event count",
         stateRows > 0 && badState == 0,
         s"state_rows=$stateRows violations=$badState"))
     Summary(generated, valid, errors, metricsRows, stateRows, checks)
@@ -340,12 +344,11 @@ object LocalPipelineMain {
     val spark = graft.GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val s = run(spark, dir, rows)
-    val checksJson = s.checks.map { case (inv, pass, det) =>
-      s"""{"invariant":"$inv","pass":$pass,"detail":"$det"}"""
-    }.mkString("[", ",", "]")
-    println(s"""{"generated":${s.generated},"valid":${s.valid},"errors":${s.errors},"metrics_rows":${s.metricsRows},"state_rows":${s.stateRows},"n_failed":${s.checks.count(!_._2)},"checks":$checksJson}""")
-    spark.stop()
-    if (s.checks.exists(!_._2)) sys.exit(1)
+    ScaleGate.finish(spark, Json.obj("generated" -> s.generated,
+      "valid" -> s.valid, "errors" -> s.errors,
+      "metrics_rows" -> s.metricsRows, "state_rows" -> s.stateRows,
+      "n_failed" -> s.checks.count(!_.pass),
+      "checks" -> s.checks.map(_.entry)), s.checks)
   }
 }
 

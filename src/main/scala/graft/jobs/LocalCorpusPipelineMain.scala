@@ -3,7 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{ScaleGate, ScaleStream, SparkEntry, Tables}
+import graft.{Json, ScaleGate, ScaleStream, SparkEntry, Tables}
+import graft.ScaleGate.Check
 import graft.streaming.EmbStream
 
 /** The D-side LocalPipelineMain (r15 verdict #5): ONE self-checking
@@ -33,7 +34,7 @@ import graft.streaming.EmbStream
   * composition can state.
   *
   * Run: `sbt "runMain graft.jobs.LocalCorpusPipelineMain
-  * dir=/tmp/graft_corpus_pipeline sf=/root/testdata/sf0.01"`.
+  * --dir /tmp/graft_corpus_pipeline --sf /root/testdata/sf0.01"`.
   * Prints a one-line JSON summary; exits non-zero on any violated
   * invariant.
   */
@@ -43,16 +44,18 @@ object LocalCorpusPipelineMain {
       totalDocs: Long, normKept: Long, bootstrapVecs: Long,
       streamedVecs: Long, embSurvivors: Long, survivorDocs: Long,
       curated: Long, shardRows: Long,
-      checks: Seq[(String, Boolean, String)])
+      checks: Seq[Check])
 
   private[graft] def run(spark: SparkSession, dir: String,
       sfDir: String): Summary = {
     import spark.implicits._
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val checks = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean, String)]
+    val checks = scala.collection.mutable.ArrayBuffer.empty[Check]
     def check(inv: String, pass: Boolean, detail: String): Unit =
-      checks += ((inv, pass, detail))
+      checks += Check("corpus_pipeline", inv, pass, detail)
+    def tagged(tag: String, cs: Seq[Check]): Unit =
+      checks ++= cs.map(c => c.copy(invariant = s"$tag ${c.invariant}"))
 
     // ---- stage 0: ingest — materialize the working corpus dir the
     // registered queries will read (a real deployment's landing zone)
@@ -71,8 +74,7 @@ object LocalCorpusPipelineMain {
     // the landing corpus; gate laws on its verdict frame
     val normVerdicts = SparkEntry.queries("dedup_norm_exact")(spark, corpus0)
       .persist()
-    checks ++= ScaleGate.normExactLaws(normVerdicts,
-      docs.select("doc_id")).map(c => (s"D64 ${c.invariant}", c.pass, c.detail))
+    tagged("D64", ScaleGate.normExactLaws(normVerdicts, docs.select("doc_id")))
     val normKeepIds = normVerdicts.filter(col("keep"))
       .select(col("doc_id")).persist()
     val normKept = normKeepIds.count()
@@ -126,13 +128,10 @@ object LocalCorpusPipelineMain {
       s"verdicts=$vRows streamed=$streamedVecs")
     val seen = bootstrap.select("vec_id")
       .unionByName(embVerdicts.select("vec_id"))
-    val psl = ScaleStream.partnerSeenLaw("corpus_pipeline", embVerdicts,
-      "vec_id", seen)
-    check(s"B29 ${psl.invariant}", psl.pass, psl.detail)
-    val gl = ScaleStream.growthLaw("corpus_pipeline",
-      "accepted-vector store",
-      spark.read.parquet(vec).count(), bootstrapVecs, embSurvivors)
-    check(s"B29 ${gl.invariant}", gl.pass, gl.detail)
+    tagged("B29", Seq(
+      ScaleStream.partnerSeenLaw("corpus_pipeline", embVerdicts, "vec_id", seen),
+      ScaleStream.growthLaw("corpus_pipeline", "accepted-vector store",
+        spark.read.parquet(vec).count(), bootstrapVecs, embSurvivors)))
 
     // ---- stage 3: the survivor corpus — norm-exact keepers that the
     // embedding pass also admitted (bootstrap half is the index, so
@@ -167,8 +166,7 @@ object LocalCorpusPipelineMain {
     check("curate ⊆ survivors, shard ⊆ curate (monotone pipeline)",
       curated <= survivorDocs && shardRows <= curated && shardRows > 0,
       s"survivors=$survivorDocs curated=$curated shard=$shardRows")
-    checks ++= graft.operators.Curate.shardChecksFor(spark, corpus1)
-      .map { case (inv, pass, det) => (s"D75 $inv", pass, det) }
+    tagged("D75", graft.operators.Curate.shardChecksFor(spark, corpus1))
 
     docs.unpersist(); embs.unpersist(); normVerdicts.unpersist()
     normKeepIds.unpersist(); keptEmbs.unpersist(); embVerdicts.unpersist()
@@ -185,19 +183,12 @@ object LocalCorpusPipelineMain {
     val spark = graft.GraftRuntime.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val s = run(spark, dir, sfDir)
-    def esc(x: String): String = x.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val checksJson = s.checks.map { case (inv, pass, det) =>
-      s"""{"invariant":"${esc(inv)}","pass":$pass,"detail":"${esc(det)}"}"""
-    }.mkString("[", ",", "]")
-    println(
-      s"""{"total_docs":${s.totalDocs},"norm_kept":${s.normKept},"bootstrap_vecs":${s.bootstrapVecs},"streamed_vecs":${s.streamedVecs},"emb_survivors":${s.embSurvivors},"survivor_docs":${s.survivorDocs},"curated":${s.curated},"shard_rows":${s.shardRows},"n_checks":${s.checks.size},"n_failed":${s.checks.count(!_._2)},"checks":$checksJson}""")
-    spark.stop()
-    if (s.checks.exists(!_._2)) sys.exit(1)
+    ScaleGate.finish(spark, Json.obj("total_docs" -> s.totalDocs,
+      "norm_kept" -> s.normKept, "bootstrap_vecs" -> s.bootstrapVecs,
+      "streamed_vecs" -> s.streamedVecs, "emb_survivors" -> s.embSurvivors,
+      "survivor_docs" -> s.survivorDocs, "curated" -> s.curated,
+      "shard_rows" -> s.shardRows, "n_checks" -> s.checks.size,
+      "n_failed" -> s.checks.count(!_.pass),
+      "checks" -> s.checks.map(_.entry)), s.checks)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, ScaleGate, Tables}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus curation — the flagship composition:
@@ -314,7 +314,7 @@ object Curate {
   /** [[graft.ScaleGate]]'s invariant suite for [[shard]] — the laws
     * the composition guarantees at ANY tier, checkable from the
     * output alone (plus the component frames for the subset/budget
-    * laws): (invariant, pass, detail) triples.
+    * laws): checks on the `pipeline_shard` query.
     *
     * The pack CONTIGUITY law is the strong one: decode each doc's
     * global start position as bin_id * [[ShardBinTokens]] +
@@ -325,7 +325,7 @@ object Curate {
     * 11th-decile bug — from observable output.
     */
   private[graft] def shardChecksFor(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[(String, Boolean, String)] = {
+      d: String): Seq[ScaleGate.Check] = {
     // ONE evaluation of the curate pipeline feeds all three consumers
     // (the shard under check, the subset law, and the budget-law
     // recomputation) — uncached, each would re-run the whole curate
@@ -378,15 +378,17 @@ object Curate {
           else Some(s"$src: tokens=$t budget=$budget selected=$nSel " +
             s"curated=$nCur max_doc=$maxN")
         }
+      def law(inv: String, pass: Boolean, detail: String) =
+        ScaleGate.Check(shard.name, inv, pass, detail)
       Seq(
-        ("every shard doc is curated (shard ⊆ pipeline_curate), one row each",
+        law("every shard doc is curated (shard ⊆ pipeline_curate), one row each",
           rows == distinct && orphans == 0,
           s"rows=$rows distinct=$distinct orphans=$orphans"),
-        (s"pack offsets decode: 0 <= start_offset < $ShardBinTokens, bin_id >= 0",
+        law(s"pack offsets decode: 0 <= start_offset < $ShardBinTokens, bin_id >= 0",
           badOffset == 0, s"violations=$badOffset"),
-        ("per-source packed spans are contiguous from 0 (the full prefix-sum law)",
+        law("per-source packed spans are contiguous from 0 (the full prefix-sum law)",
           contViolations.isEmpty, contViolations.take(5).mkString("; ")),
-        ("per-source fill reaches its budget and overshoots by < one doc",
+        law("per-source fill reaches its budget and overshoots by < one doc",
           budgetViolations.isEmpty, budgetViolations.take(5).mkString("; ")))
     } finally { out.unpersist(); curated.unpersist(); () }
   }

@@ -502,33 +502,34 @@ object EventStream {
     * millis breaks the tie between replayed attempts of one batch,
     * and also keeps the rename target fresh if the same batch
     * replays after a crash between swap and prune.
+    * Only names the sink writes count, for recovery and prune alike:
+    * any other `<path>.old-*` (an operator's `.old-manual` copy) is
+    * neither read nor deleted.
     */
   private def upsertBackups(
       fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[org.apache.hadoop.fs.Path] =
+      path: String): Seq[org.apache.hadoop.fs.Path] = {
+    val prefix = new org.apache.hadoop.fs.Path(path).getName + ".old-"
     fs.globStatus(new org.apache.hadoop.fs.Path(s"$path.old-*"))
       .toSeq.map(_.getPath)
-      .sortBy { p =>
-        val suffix = p.getName.substring(p.getName.indexOf(".old-") + 5)
-        suffix.split('-') match {
-          case Array(b, t) if b.forall(_.isDigit) && t.forall(_.isDigit) =>
-            (b.toLong, t.toLong)
+      .flatMap { p =>
+        p.getName.stripPrefix(prefix) match {
+          case UpsertBackup(b, t) => Some(p -> (b.toLong, t.toLong))
           // legacy single-number (nanoTime) suffix: its magnitude
           // (~1e12) would outsort every (batchId, millis) tuple and
           // recovery would prefer the STALE pre-upgrade snapshot —
           // pin legacy backups below all new-format ones instead
           // (among themselves they keep their original order)
-          case Array(t) if t.nonEmpty && t.forall(_.isDigit) =>
-            (Long.MinValue, t.toLong)
-          // an unparseable name (e.g. an operator's <path>.old-manual
-  	      // copy) must never wedge the stream: pin it below every
-          // real backup so recovery ignores it, and prune leaves it
-          // alone (it is never in the keep-newest window's tail only
-          // if old — acceptable: a human artifact is a human's to
-          // delete)
-          case _ => (Long.MinValue, Long.MinValue)
+          case UpsertLegacyBackup(t) => Some(p -> (Long.MinValue, t.toLong))
+          case _ => None
         }
       }
+      .sortBy(_._2).map(_._1)
+  }
+
+  // at most 18 digits, so every accepted number fits a Long
+  private val UpsertBackup = """(\d{1,18})-(\d{1,18})""".r
+  private val UpsertLegacyBackup = """(\d{1,18})""".r
 
   /** One upsert merge, callable from a batch job too (the MERGE-into-
     * materialized-view emulation without a table-format jar): resolve

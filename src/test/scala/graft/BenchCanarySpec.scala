@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The canary's committed-level resolution (Bench.resolveCommitted):
-  * pin > lineage-derived > local[32] bootstrap constant > off. The
+  * lineage-derived > local[32] bootstrap constant > off. The
   * derived level is the MINIMUM of the last N window medians at the
   * same core count (r14 review): a median-of-calm scheme ratchets
   * upward under sustained sub-threshold drift and can be poisoned by
@@ -32,20 +32,24 @@ class BenchCanarySpec extends AnyFunSuite {
     */
   private val DefaultHeapMb = 7936L
 
-  private def resolveCommitted(cpus: String, lineage: java.nio.file.Path,
-      pin: Option[Double]): (Option[Double], String) =
-    Bench.resolveCommitted(cpus, lineage, pin,
+  private def resolveCommitted(cpus: String, lineage: java.nio.file.Path)
+      : (Option[Double], String) =
+    Bench.resolveCommitted(cpus, lineage,
       currentHeapMb = DefaultHeapMb, currentIsDefault = true)
 
-  private def resolveCommittedIo(cpus: String, lineage: java.nio.file.Path,
-      pin: Option[Double]): (Option[Double], String) =
-    Bench.resolveCommittedIo(cpus, lineage, pin,
+  private def resolveCommittedIo(cpus: String, lineage: java.nio.file.Path)
+      : (Option[Double], String) =
+    Bench.resolveCommittedIo(cpus, lineage,
       currentHeapMb = DefaultHeapMb, currentIsDefault = true)
 
   private def resolveQueryFloors(cpus: String, lineage: java.nio.file.Path)
       : (Map[String, Double], Int, String) =
     Bench.resolveQueryFloors(cpus, lineage,
       currentHeapMb = DefaultHeapMb, currentIsDefault = true)
+
+  private def heapMatches(line: String, currentHeapMb: Long,
+      currentIsDefault: Boolean): Boolean =
+    Bench.heapMatches(Json.parse(line).get, currentHeapMb, currentIsDefault)
 
   private def entry(cpus: Int, median: Double,
       inflated: Option[Boolean]): String = inflated match {
@@ -55,18 +59,12 @@ class BenchCanarySpec extends AnyFunSuite {
       s"""{"cpus":$cpus,"median":$median,"committed":null,"ratio":null,"inflated":null,"provenance":"off"}"""
   }
 
-  test("an explicit pin wins over everything and reads as pinned") {
-    val lineage = tmpLineage(entry(32, 0.40, Some(false)))
-    assert(resolveCommitted("32", lineage, pin = Some(0.8)) ==
-      (Some(0.8), "pinned"))
-  }
-
   test("the derived level is the min of the recent windows at this core count") {
     val lineage = tmpLineage(
       entry(32, 0.50, Some(false)),
       entry(32, 0.60, Some(false)),
       entry(32, 0.55, Some(false)))
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.50), "derived"))
   }
 
@@ -78,7 +76,7 @@ class BenchCanarySpec extends AnyFunSuite {
     val lineage = tmpLineage(
       entry(32, 0.600, Some(false)),
       entry(32, 0.710, Some(false)))
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.600), "derived"),
       "the drifted window must not become the new calm level")
   }
@@ -89,7 +87,7 @@ class BenchCanarySpec extends AnyFunSuite {
     val lineage = tmpLineage(
       (Seq.fill(5)(0.30) ++ Seq.fill(5)(0.60))
         .map(m => entry(32, m, Some(false))): _*)
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.60), "derived"))
   }
 
@@ -98,13 +96,13 @@ class BenchCanarySpec extends AnyFunSuite {
       entry(32, 0.50, Some(false)),
       entry(32, 2.50, Some(true)), // a flagged-hot window is harmless under min
       entry(32, 0.52, Some(false)))
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.50), "derived"))
   }
 
   test("flag-off windows seed the level (non-32-core self-bootstrap)") {
     val lineage = tmpLineage(entry(4, 3.30, None), entry(4, 3.10, None))
-    assert(resolveCommitted("4", lineage, pin = None) ==
+    assert(resolveCommitted("4", lineage) ==
       (Some(3.10), "derived"),
       "runs 1/2 seeded the lineage with the flag off; run 3 must derive")
   }
@@ -114,24 +112,24 @@ class BenchCanarySpec extends AnyFunSuite {
     // co-tenant load (median 6.0, flag off), run 2 is calm (3.1) —
     // the min takes the calm window, so the poison never sticks
     val lineage = tmpLineage(entry(4, 6.00, None), entry(4, 3.10, None))
-    assert(resolveCommitted("4", lineage, pin = None) ==
+    assert(resolveCommitted("4", lineage) ==
       (Some(3.10), "derived"))
   }
 
   test("other core counts' entries are invisible") {
     val lineage = tmpLineage(entry(4, 3.10, None))
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.57), "default"), "local[32] falls back to the bootstrap constant")
-    assert(resolveCommitted("8", lineage, pin = None) == (None, "off"),
+    assert(resolveCommitted("8", lineage) == (None, "off"),
       "off the reference count with no lineage at it, the flag stays off")
   }
 
   test("a missing lineage file resolves like an empty one") {
     val p = java.nio.file.Paths.get("/tmp/graft_no_such_lineage.jsonl")
     java.nio.file.Files.deleteIfExists(p)
-    assert(resolveCommitted("32", p, pin = None) ==
+    assert(resolveCommitted("32", p) ==
       (Some(0.57), "default"))
-    assert(resolveCommitted("16", p, pin = None) == (None, "off"))
+    assert(resolveCommitted("16", p) == (None, "off"))
   }
 
   // -------------------------------------------------------------
@@ -139,13 +137,13 @@ class BenchCanarySpec extends AnyFunSuite {
   // trailing line; its fragment must never enter the min pool.
 
   test("a torn trailing line cannot pin the level at zero") {
-    // `"median":0.` regex-parses as 0.0; unguarded, the min would pin
+    // a line regex would read `"median":0.` as 0.0; unguarded, the min would pin
     // the level at 0 and flag every window (ratio = Infinity) for the
     // next N runs
     val lineage = tmpLineage(
       entry(32, 0.50, Some(false)),
       """{"cpus":32,"median":0.""")
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.50), "derived"))
   }
 
@@ -153,13 +151,13 @@ class BenchCanarySpec extends AnyFunSuite {
     val lineage = tmpLineage(
       """{"cpus":32,"median":0,"committed":null,"ratio":null,"inflated":null,"provenance":"off"}""",
       entry(32, 0.52, Some(false)))
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.52), "derived"))
   }
 
   test("a lineage of ONLY torn lines falls back to the bootstrap") {
     val lineage = tmpLineage("""{"cpus":32,"median":0.""")
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.57), "default"))
   }
 
@@ -173,24 +171,18 @@ class BenchCanarySpec extends AnyFunSuite {
     val lineage = tmpLineage(
       entryIo(32, 0.40, 0.70),
       entryIo(32, 0.80, 0.65))
-    assert(resolveCommittedIo("32", lineage, pin = None) ==
+    assert(resolveCommittedIo("32", lineage) ==
       (Some(0.65), "derived"))
-    assert(resolveCommitted("32", lineage, pin = None) ==
+    assert(resolveCommitted("32", lineage) ==
       (Some(0.40), "derived"),
       "the cpu axis must not read the io medians")
   }
 
   test("pre-r15 lines (no median_io) leave the io axis on its bootstrap") {
     val lineage = tmpLineage(entry(32, 0.50, Some(false)))
-    assert(resolveCommittedIo("32", lineage, pin = None) ==
+    assert(resolveCommittedIo("32", lineage) ==
       (Some(0.60), "default"))
-    assert(resolveCommittedIo("8", lineage, pin = None) == (None, "off"))
-  }
-
-  test("an io pin wins and reads as pinned") {
-    val lineage = tmpLineage(entryIo(32, 0.40, 0.40))
-    assert(resolveCommittedIo("32", lineage, pin = Some(0.9)) ==
-      (Some(0.9), "pinned"))
+    assert(resolveCommittedIo("8", lineage) == (None, "off"))
   }
 
   // -------------------------------------------------------------
@@ -311,18 +303,18 @@ class BenchCanarySpec extends AnyFunSuite {
   test("a different-heap window's lineage line is invisible; same heap matches") {
     val line96 = """{"cpus":32,"heap_mb":98304,"median":0.50,"q_mins":{"qa":3.5}}"""
     val line8 = """{"cpus":32,"heap_mb":7936,"median":0.60,"q_mins":{"qa":0.9}}"""
-    assert(Bench.heapMatches(line8, 7936, currentIsDefault = true))
-    assert(!Bench.heapMatches(line96, 7936, currentIsDefault = true),
+    assert(heapMatches(line8, 7936, currentIsDefault = true))
+    assert(!heapMatches(line96, 7936, currentIsDefault = true),
       "the 96g window must not seed an 8g run's levels or floors")
-    assert(Bench.heapMatches(line96, 98304, currentIsDefault = false))
-    assert(!Bench.heapMatches(line8, 98304, currentIsDefault = false))
+    assert(heapMatches(line96, 98304, currentIsDefault = false))
+    assert(!heapMatches(line8, 98304, currentIsDefault = false))
   }
 
   test("legacy lines (no heap_mb) are default-heap lines: visible only to default-heap runs") {
     val legacy = entry(32, 0.50, Some(false))
-    assert(Bench.heapMatches(legacy, 7936, currentIsDefault = true),
+    assert(heapMatches(legacy, 7936, currentIsDefault = true),
       "all historical windows ran at the build default")
-    assert(!Bench.heapMatches(legacy, 98304, currentIsDefault = false),
+    assert(!heapMatches(legacy, 98304, currentIsDefault = false),
       "an inflated-heap run must not inherit default-heap history")
   }
 
@@ -337,11 +329,11 @@ class BenchCanarySpec extends AnyFunSuite {
     val lineage = tmpLineage(
       entry(32, 0.40, Some(false)), // legacy default-heap line
       entryIo(32, 0.42, 0.55))
-    assert(Bench.resolveCommitted("32", lineage, pin = None,
+    assert(Bench.resolveCommitted("32", lineage,
       currentHeapMb = 91136L, currentIsDefault = false) ==
       (Some(0.57), "default"),
       "default-heap minima must not arm a 89g window's flag; the bootstrap applies")
-    assert(Bench.resolveCommitted("8", lineage, pin = None,
+    assert(Bench.resolveCommitted("8", lineage,
       currentHeapMb = 91136L, currentIsDefault = false) == (None, "off"))
   }
 
@@ -349,7 +341,7 @@ class BenchCanarySpec extends AnyFunSuite {
     val l96a = """{"cpus":32,"heap_mb":91136,"median":0.80,"committed":0.57,"ratio":1.4,"inflated":false,"provenance":"default"}"""
     val l96b = """{"cpus":32,"heap_mb":91136,"median":0.72,"committed":0.57,"ratio":1.26,"inflated":false,"provenance":"default"}"""
     val lineage = tmpLineage(entry(32, 0.40, Some(false)), l96a, l96b)
-    assert(Bench.resolveCommitted("32", lineage, pin = None,
+    assert(Bench.resolveCommitted("32", lineage,
       currentHeapMb = 91136L, currentIsDefault = false) ==
       (Some(0.72), "derived"),
       "a 89g run derives from its own heap's windows, not the 8g minima")
@@ -389,5 +381,24 @@ class BenchCanarySpec extends AnyFunSuite {
     val lines = dup +: (1 to 50).map(i => entry(32, i / 100.0, Some(false)))
     val trimmed = Bench.trimLineage(lines :+ dup, keep = 50)
     assert(trimmed.size == 50 && trimmed.last == dup)
+  }
+
+  // -------------------------------------------------------------
+  // Writer and reader agree: the line Bench appends is the line its
+  // resolvers read back.
+
+  test("a lineage entry from Bench's writer reads back with the values it was written with") {
+    val cpu = Bench.Axis(Seq(0.530, 0.512, 0.700), Some(0.57), "default", 1.5)
+    val io = Bench.Axis(Seq(0.634, 0.650, 0.610), None, "off", 1.5)
+    val line = Bench.lineageEntry("32", DefaultHeapMb, cpu, io,
+      Seq("qa" -> 1.234, "qb" -> 0.05))
+    val lineage = tmpLineage(line)
+    assert(resolveCommitted("32", lineage) == (Some(0.530), "derived"))
+    assert(resolveCommittedIo("32", lineage) == (Some(0.634), "derived"))
+    assert(resolveQueryFloors("32", lineage) ==
+      (Map("qa" -> 1.234, "qb" -> 0.05), 1, "same-heap"))
+    assert(heapMatches(line, DefaultHeapMb, currentIsDefault = false))
+    assert(resolveCommitted("8", lineage) == (None, "off"),
+      "the entry is keyed on the core count it was written with")
   }
 }

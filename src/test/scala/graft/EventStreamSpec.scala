@@ -627,6 +627,35 @@ class EventStreamSpec extends AnyFunSuite {
     }
   }
 
+  test("upsert sink neither reads, prunes nor chokes on .old-* names it did not write") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_stray").toString
+    // an operator's copy, and a name whose suffix splits to ("", "5")
+    val strays = Seq(s"$dir/view.old-manual", s"$dir/view.old--5")
+    strays.foreach(p => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(p), "not a snapshot"))
+    val input = MemoryStream[(String, Long, String)]
+    val q = EventStream.upsertSink(input.toDF().toDF("userId", "ver", "state"),
+      Seq("userId"), "ver", s"$dir/view", s"$dir/ckpt").start()
+    try {
+      input.addData(("u1", 1L, "a"), ("u2", 1L, "b"))
+      q.processAllAvailable()
+      input.addData(("u1", 2L, "c"))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"the sink failed: ${q.exception}")
+      val view = spark.read.parquet(s"$dir/view")
+        .as[(String, Long, String)].collect().sortBy(_._1)
+      assert(view.toSeq == Seq(("u1", 2L, "c"), ("u2", 1L, "b")))
+      strays.foreach(p => assert(new java.io.File(p).isFile,
+        s"$p is not the sink's to delete"))
+    } finally {
+      q.stop()
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
+
   test("two interleaved upsert writers on one snapshot dir: last writer wins per key, nothing lost") {
     // The documented concurrency contract, machine-checked (r6 task 8):
     // upsertSink's materialize-then-atomic-swap emulates MERGE on

@@ -27,9 +27,9 @@ class LocalCorpusPipelineSpec extends AnyFunSuite {
       assert(s.curated <= s.survivorDocs && s.shardRows <= s.curated &&
         s.shardRows > 0,
         s"monotone pipeline: ${s.survivorDocs} -> ${s.curated} -> ${s.shardRows}")
-      val failed = s.checks.filterNot(_._2)
+      val failed = s.checks.filterNot(_.pass)
       assert(failed.isEmpty, "violated composition laws:\n" + failed
-        .map { case (inv, _, det) => s"  $inv ($det)" }.mkString("\n"))
+        .map(c => s"  ${c.invariant} (${c.detail})").mkString("\n"))
       assert(s.checks.size >= 10,
         s"expected the full law sweep, got ${s.checks.size}")
     } finally {

@@ -22,9 +22,9 @@ class LocalPipelineSpec extends AnyFunSuite {
       assert(s.valid > 0 && s.errors > 0,
         s"both routes must carry rows: valid=${s.valid} errors=${s.errors}")
       assert(s.metricsRows > 0, "the flush must close and emit real windows")
-      val failed = s.checks.filterNot(_._2)
+      val failed = s.checks.filterNot(_.pass)
       assert(failed.isEmpty, "pipeline law violations:\n" + failed
-        .map { case (inv, _, det) => s"  $inv ($det)" }.mkString("\n"))
+        .map(c => s"  ${c.invariant} (${c.detail})").mkString("\n"))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
