@@ -642,7 +642,8 @@ object Bench {
     if (inflatedOpt.isEmpty) System.err.println(
       s"[bench] canary flag disabled: no committed calm level resolves for " +
         s"local[$cpus] on either axis (no lineage at this core count) - " +
-        "this run's medians seed the lineage")
+        (if (filter.isEmpty) "this run's medians seed the lineage"
+         else "a filtered run does not append to the lineage; an unfiltered run seeds it"))
     // Per-axis objects + the either-axis flag and attribution (r14
     // What's-wrong 1: the CPU-only canary read 0.97x calm on a +22%
     // IO-pressured window; the artifact now carries both axes and

@@ -88,10 +88,23 @@ object GraftRuntime {
     * created file and per rename. `LocalFsSpec` pins the parity and
     * the missing forks. Other schemes are unaffected. A
     * `spark.hadoop.`-prefixed setting of the key also counts as set.
+    *
+    * `spark.sql.streaming.stateStore.providerClass` = RocksDB, with
+    * `…rocksdb.changelogCheckpointing.enabled=true` (Spark 4.1 defaults
+    * to the heap-backed HDFS provider and to full snapshots): every
+    * stateful query (`enrich`, the windowed aggregates, the
+    * transformWithState operators, which need RocksDB) keeps its state
+    * off the JVM heap and uploads only each batch's changelog. The
+    * provider is pinned in a query's checkpoint (Spark lists it among
+    * the offset log's relevant confs), so a query started under another
+    * provider resumes under that one. `RocksDbStateSpec` pins both.
     */
   val sessionConfs: Seq[(String, String)] = Seq(
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "fs.AbstractFileSystem.file.impl" -> classOf[sources.GraftLocalFs].getName)
+    "fs.AbstractFileSystem.file.impl" -> classOf[sources.GraftLocalFs].getName,
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** Local-mode session with the catalog installed: `local[cpus]`, one
     * shuffle partition per core, UTC session time, parquet

@@ -451,8 +451,9 @@ object ScaleStreamState {
         e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
-  /** Drive one stateful loop over the shared backlog under RocksDB;
-    * returns the loop result plus (peak, final) observed state rows.
+  /** Drive one stateful loop over the shared backlog (under the
+    * session's RocksDB state store); returns the loop result plus
+    * (peak, final) observed state rows.
     */
   private def drive(spark: SparkSession, loop: String, backlogDir: String,
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
@@ -461,12 +462,10 @@ object ScaleStreamState {
     val listener = new StateListener
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
-    try StateConfig.withRocksDB(spark) {
-      val q = start(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(backlogDir))
-      q.awaitTermination()
-    } finally spark.streams.removeListener(listener)
+    try start(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(backlogDir)).awaitTermination()
+    finally spark.streams.removeListener(listener)
     ((System.nanoTime() - t0) / 1e9, listener.rows.toSeq,
       listener.peakStateRows, listener.finalStateRows)
   }

@@ -52,8 +52,9 @@ final case class CepPrefix(stageTs: Seq[Long])
   * Within a micro-batch events are processed in (timestamp, eventType)
   * order, making replays over the same batch boundaries deterministic.
   *
-  * Requires the RocksDB state-store provider ([[StateConfig.rocksdb]]);
-  * state (prefix + armed timer) survives a checkpoint restart through
+  * Requires the RocksDB state-store provider, which graft sessions run
+  * by default ([[graft.GraftRuntime.sessionConfs]]); state (prefix +
+  * armed timer) survives a checkpoint restart through
   * changelog recovery — PatternDetectTwsSpec proves the timer fires
   * after a restart.
   */

@@ -62,8 +62,9 @@ final case class PeriodicMetrics(
   * with respect to the window boundary — no approximation traded for
   * the folding. Emission volume is one row per interval per LIVE key;
   * drained keys cost nothing until they wake. Requires the RocksDB
-  * state-store provider ([[StateConfig.rocksdb]]); state and armed
-  * timers survive restarts through changelog recovery (spec-proven).
+  * state-store provider, which graft sessions run by default
+  * ([[graft.GraftRuntime.sessionConfs]]); state and armed timers
+  * survive restarts through changelog recovery (spec-proven).
   */
 class PeriodicAggProcessor(windowMs: Long, intervalMs: Long)
     extends StatefulProcessor[String, Row, PeriodicMetrics] {

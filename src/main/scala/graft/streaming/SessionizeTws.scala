@@ -18,9 +18,8 @@ final case class SessionAcc(start: Long, end: Long, n: Long)
   * arbitrary-stateful-processing API that adds what
   * `flatMapGroupsWithState` never had: EVENT-TIME TIMERS (the Flink
   * timer-service analog), typed named state variables, and optional
-  * state TTL. Requires the RocksDB state-store provider
-  * ([[StateConfig.rocksdb]]), which is how a production deployment
-  * runs anyway.
+  * state TTL. Requires the RocksDB state-store provider, which graft
+  * sessions run by default ([[graft.GraftRuntime.sessionConfs]]).
   *
   * Semantics (Flink-style gap session): an event within `gapMs` of
   * the open session's end extends it; a later event CLOSES the open

@@ -26,9 +26,9 @@ class AvailableNowSpec extends AnyFunSuite {
   }
 
   test("backfill drains a multi-file backlog in bounded batches with state continuity") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_an_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_an_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_an_ckpt").toString
+    val srcDir = TestSpark.tempDir("graft_an_src").toString
+    val outDir = TestSpark.tempDir("graft_an_out").toString
+    val ckpt = TestSpark.tempDir("graft_an_ckpt").toString
     // 6 history files; file f carries the (f+1)-th event of EACH of 10
     // users, so every user's sequence spans all six files
     val users = (0 until 10).map(u => s"u$u")
@@ -61,9 +61,9 @@ class AvailableNowSpec extends AnyFunSuite {
   }
 
   test("a live continuation resumes the backfill's offsets and state") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cont_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_cont_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cont_ckpt").toString
+    val srcDir = TestSpark.tempDir("graft_cont_src").toString
+    val outDir = TestSpark.tempDir("graft_cont_out").toString
+    val ckpt = TestSpark.tempDir("graft_cont_ckpt").toString
     def writeFile(f: Int): Unit =
       Seq(s"""{"id":"u1","type":"login","timestamp":${1000L + f},"data":{}}""")
         .toDF("value").coalesce(1).write.mode("append").parquet(srcDir)

@@ -12,19 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * batch inside the loop body when asked and leaves Kafka-delivered
   * partitioning alone by default.
   */
-class BatchParSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class BatchParSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_bp_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_bp_$tag").toString
 
   test("the seam spreads a one-partition batch; None leaves partitioning alone") {
     import spark.implicits._

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchCanarySpec extends AnyFunSuite {
 
   private def tmpLineage(lines: String*): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempFile("canary_lineage", ".jsonl")
+    val p = TestSpark.tempFile("canary_lineage", ".jsonl")
     java.nio.file.Files.write(p,
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     p

@@ -45,7 +45,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("hand-computable corpus: merges match the worked example") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = TestSpark.tempDir("graft_bpe").toString
     try {
       // "aaab" x2 + "aab" x1: round 1 counts (a,a)=5 (a,b)=3 -> merge aa;
       // round 2 counts (aa,a)=2 (a,b)=2 (aa,b)=1 -> tie broken to (a,b)

@@ -11,21 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream, carried-state correctness across micro-batches, and
   * exactly-once verdict/state partitions under replay.
   */
-class BudgetStreamSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class BudgetStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.sfDir
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_bs_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { dd =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(dd)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_bs_$tag").toString
 
   private def keptRows(verdictsDir: String): Set[(String, Long, Long, Long)] =
     spark.read.parquet(verdictsDir).filter(col("kept"))

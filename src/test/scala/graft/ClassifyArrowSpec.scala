@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.sys.process._
 
 import org.apache.spark.sql.functions._
@@ -33,9 +31,9 @@ class ClassifyArrowSpec extends AnyFunSuite {
   // (~40 s of local-mode PySpark startup paid once); lazily launched
   // so a cancelled suite never forks Python at all.
   private lazy val outDir: String = {
-    val art = Files.createTempDirectory("graft-nb-art").toString
+    val art = TestSpark.tempDir("graft-nb-art").toString
     ClassifyArrow.writeArtifacts(spark, sf01, art)
-    val dir = Files.createTempDirectory("graft-nb-out").toString
+    val dir = TestSpark.tempDir("graft-nb-out").toString
     val log = new StringBuilder
     val exit = Process(
       Seq("python3", ClassifyArrow.scriptPath, sf01, art, dir),
@@ -98,7 +96,7 @@ class ClassifyArrowSpec extends AnyFunSuite {
     // the distributed scorer cannot drift (exceptAll both directions
     // against a fresh training run)
     val art = {
-      val d = Files.createTempDirectory("graft-nb-art2").toString
+      val d = TestSpark.tempDir("graft-nb-art2").toString
       ClassifyArrow.writeArtifacts(spark, sf01, d); d
     }
     val (model, consts) = Select.nbArtifacts(spark, sf01)

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.GraftOps
 
 /** [[GraftRuntime.sessionConfs]]: a streaming query restarted on a
-  * graft session reuses the generated classes the JVM already compiled.
+  * graft session reuses the generated classes the JVM already compiled,
+  * and install sets each conf only where the session left it unset.
   * Every query start clones the session under a new UUID; with artifact
   * isolation on, each clone gets its own executor class loader, and
   * `CodeGenerator`'s cache (keyed by loader and source) misses.
@@ -30,8 +31,8 @@ class CodegenReuseSpec extends AnyFunSuite {
     * checkpoint and output.
     */
   private def compilesOfOneRun(input: String): Long = {
-    val out = Files.createTempDirectory("graft_cg_out").toFile
-    val ckpt = Files.createTempDirectory("graft_cg_ckpt").toFile
+    val out = TestSpark.tempDir("graft_cg_out").toFile
+    val ckpt = TestSpark.tempDir("graft_cg_ckpt").toFile
     try {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val q = spark.readStream.schema(StructType(Seq(StructField("value", StringType))))
@@ -56,7 +57,7 @@ class CodegenReuseSpec extends AnyFunSuite {
 
   /** Compiles of the second of two identical runs over fresh input. */
   private def compilesOfSecondRun(): Long = {
-    val input = Files.createTempDirectory("graft_cg_in").toFile
+    val input = TestSpark.tempDir("graft_cg_in").toFile
     try {
       val lines = (0 until 200).map { i =>
         s"""{"id":$i,"kind":"${if (i % 2 == 0) "a" else "b"}","v":${i % 4}.5}"""
@@ -84,13 +85,18 @@ class CodegenReuseSpec extends AnyFunSuite {
   }
 
   test("install keeps a value the session sets explicitly") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val explicit = Seq(Key -> "true", provider ->
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     val s = spark.newSession()
-    s.conf.set(Key, "true")
+    explicit.foreach { case (k, v) => s.conf.set(k, v) }
     GraftOps.install(s)
-    assert(s.conf.get(Key) == "true")
+    explicit.foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
     val fresh = spark.newSession()
     GraftOps.install(fresh)
     assert(fresh.conf.get(Key) == "false")
+    assert(fresh.conf.get(provider) ==
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   }
 
   test("a second install changes no conf") {

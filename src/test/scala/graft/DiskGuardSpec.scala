@@ -43,7 +43,7 @@ class DiskGuardSpec extends AnyFunSuite {
   }
 
   test("dirBytes sums a tree and returns 0 for a missing path") {
-    val d = java.nio.file.Files.createTempDirectory("graft_dg").toString
+    val d = TestSpark.tempDir("graft_dg").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/a"),
       Array.fill[Byte](100)(1))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$d/sub"))

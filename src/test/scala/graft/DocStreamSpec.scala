@@ -10,19 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * min-id surviving partner; survivors extend the index so the
   * accepted corpus is never re-paired with itself.
   */
-class DocStreamSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class DocStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_ds_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_ds_$tag").toString
 
   private val dupText = "the quick brown fox jumps over the lazy dog again and again today"
   private val otherText = "completely different corpus text about streaming query engines"

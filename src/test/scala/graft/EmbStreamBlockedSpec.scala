@@ -19,20 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * does not have; (4) the frozen-codebook roundtrip (bootstrap train →
   * parquet → per-batch read) is exact.
   */
-class EmbStreamBlockedSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class EmbStreamBlockedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_esb_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_esb_$tag").toString
 
   // three mutually orthogonal directions (disjoint support -> exact
   // integer dot = 0): near-dups exist only within a direction

@@ -15,19 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * verdicts when a batch re-runs against an index that already
   * contains its survivors.
   */
-class EmbStreamSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class EmbStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_es_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_es_$tag").toString
 
   test("single-batch verdicts match the batch dedup_embedding pair graph") {
     val d = TestSpark.sfDir

@@ -38,7 +38,7 @@ class EncodingSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
 
   test("Tables.events normalizes all three ts encodings to identical Long nanos") {
-    val base = java.nio.file.Files.createTempDirectory("graft-enc").toString
+    val base = TestSpark.tempDir("graft-enc").toString
     val asLong = s"$base/long"
     val asNtz = s"$base/ntz"
     val asLtz = s"$base/ltz"
@@ -59,7 +59,7 @@ class EncodingSpec extends AnyFunSuite {
     // Tables reads keep each path's inferred schema while its files are
     // unchanged; a regen in place must be re-inferred, or the old
     // schema's Long would read the new file's micros unconverted
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc-regen").toString
+    val dir = TestSpark.tempDir("graft-enc-regen").toString
     val expected = micros.map(_ * 1000L).sorted
     writeFixture(dir, col("us") * 1000L)
     val before = Tables.events(spark, dir).select("ts").as[Long].collect().sorted.toSeq
@@ -75,7 +75,7 @@ class EncodingSpec extends AnyFunSuite {
     // a TIMESTAMP(NANOS) ts reads as Long only under nanosAsLong; with
     // it off, inference itself rejects the type. So a second read that
     // reused the first read's schema would succeed where Spark fails.
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc-nanos").toString
+    val dir = TestSpark.tempDir("graft-enc-nanos").toString
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
     val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet/part-0.parquet"))
@@ -96,7 +96,7 @@ class EncodingSpec extends AnyFunSuite {
   }
 
   test("Tables.orders normalizes date32 / adjusted-timestamp o_orderdate to TIMESTAMP_NTZ") {
-    val base = java.nio.file.Files.createTempDirectory("graft-enc-date").toString
+    val base = TestSpark.tempDir("graft-enc-date").toString
     for ((enc, tsCol) <- Seq(
         "date" -> to_date(lit("1997-07-01")),
         "ltz" -> lit("1997-07-01").cast(TimestampType),
@@ -123,7 +123,7 @@ class EncodingSpec extends AnyFunSuite {
     // integer columns as INT32. Tables.documents normalizes; the whole
     // text family must produce IDENTICAL results on every variant.
     val sf = TestSpark.sfDir
-    val base = java.nio.file.Files.createTempDirectory("graft-encdoc").toString
+    val base = TestSpark.tempDir("graft-encdoc").toString
     val others = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "embeddings")
     def mkVariant(name: String)(writeDocs: String => Unit): String = {

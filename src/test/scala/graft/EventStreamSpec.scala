@@ -182,8 +182,8 @@ class EventStreamSpec extends AnyFunSuite {
     val input = MemoryStream[String]
     val (valid, _) = EventStream.parseRoute(input.toDF())
     val processed = EventStream.enrich(valid.as[ParsedEvent])
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val out = TestSpark.tempDir("graft_sink").toString
+    val ckpt = TestSpark.tempDir("graft_ckpt").toString
     val q = EventStream.parquetSink(processed, out, ckpt, triggerMs = 100L).start()
     try {
       input.addData(
@@ -205,8 +205,8 @@ class EventStreamSpec extends AnyFunSuite {
       val (valid, _) = EventStream.parseRoute(input.toDF())
       EventStream.enrich(valid.as[ParsedEvent])
     }
-    val out = java.nio.file.Files.createTempDirectory("graft_rec_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rec_ckpt").toString
+    val out = TestSpark.tempDir("graft_rec_sink").toString
+    val ckpt = TestSpark.tempDir("graft_rec_ckpt").toString
     // run 1: two events for u9 -> sequences 1, 2
     val q1 = EventStream.parquetSink(pipeline(), out, ckpt, triggerMs = 100L).start()
     try {
@@ -233,8 +233,8 @@ class EventStreamSpec extends AnyFunSuite {
     val input = MemoryStream[ParsedEvent]
     def detector() = EventStream.patternDetect(
       input.toDS(), Seq("view", "click", "purchase"), windowMs = 10000L)
-    val out = java.nio.file.Files.createTempDirectory("graft_pat_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pat_ckpt").toString
+    val out = TestSpark.tempDir("graft_pat_sink").toString
+    val ckpt = TestSpark.tempDir("graft_pat_ckpt").toString
     def ev(t: String, ts: Long) = ParsedEvent("u1", t, ts, Map.empty)
     // run 1: the first two stages arrive, no match yet
     val q1 = EventStream.parquetSink(detector(), out, ckpt, triggerMs = 100L).start()
@@ -402,7 +402,7 @@ class EventStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
     val (valid, _) = EventStream.parseRoute(input.toDF())
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fb_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_fb_ckpt").toString
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = EventStream.foreachBatchSink(valid, ckpt) { (batch, _) =>
       seen.synchronized { seen += batch.count() }
@@ -567,7 +567,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("upsert sink maintains a latest-state materialized view across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = TestSpark.tempDir("graft_upsert").toString
     val input = MemoryStream[(String, Long, String)]
     val stream = input.toDF().toDF("userId", "ver", "state")
     val q = EventStream.upsertSink(stream, Seq("userId"), "ver",
@@ -596,7 +596,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("upsert sink recovers the full view from its backup after a torn swap") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_rec").toString
+    val dir = TestSpark.tempDir("graft_upsert_rec").toString
     val input = MemoryStream[(String, Long, String)]
     val stream = input.toDF().toDF("userId", "ver", "state")
     val q = EventStream.upsertSink(stream, Seq("userId"), "ver",
@@ -630,7 +630,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("upsert sink neither reads, prunes nor chokes on .old-* names it did not write") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_stray").toString
+    val dir = TestSpark.tempDir("graft_upsert_stray").toString
     // an operator's copy, and a name whose suffix splits to ("", "5")
     val strays = Seq(s"$dir/view.old-manual", s"$dir/view.old--5")
     strays.foreach(p => java.nio.file.Files.writeString(
@@ -672,7 +672,7 @@ class EventStreamSpec extends AnyFunSuite {
     // guarantee.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_dual").toString
+    val dir = TestSpark.tempDir("graft_upsert_dual").toString
     val inA = MemoryStream[(String, Long, String)]
     val inB = MemoryStream[(String, Long, String)]
     val qA = EventStream.upsertSink(inA.toDF().toDF("userId", "ver", "state"),

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Formats
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -13,7 +12,7 @@ class FormatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val created = scala.collection.mutable.ArrayBuffer.empty[String]
 
   private def tmp(): String = {
-    val p = Files.createTempDirectory("graft_fmt").toString
+    val p = TestSpark.tempDir("graft_fmt").toString
     created += p
     p
   }

@@ -20,7 +20,7 @@ class IncrementalDedupSpec extends AnyFunSuite with org.scalatest.BeforeAndAfter
   // even doc_id = already-deduped corpus, odd = newly-arrived shard
   test("shard dedups against corpus and earlier shard docs only") {
     import spark.implicits._
-    dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    dir = TestSpark.tempDir("graft_incr").toString
     val dup = "the quick brown fox jumps over the lazy dog again and again today"
     val other = "completely different text about distributed query engines at scale"
     Seq(

@@ -37,20 +37,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (post-hoc, `dedup_cluster_keep` / `dedup_embedding_keep` collapse
   * any double-admitted pair).
   */
-class IndexOverlapSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class IndexOverlapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_io_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_io_$tag").toString
 
   private val dupText = "the quick brown fox jumps over the lazy dog again and again today"
   private val otherText = "completely different corpus text about streaming query engines"

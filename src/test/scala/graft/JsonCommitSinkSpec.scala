@@ -16,7 +16,7 @@ class JsonCommitSinkSpec extends AnyFunSuite {
   private val fmt = "graft.sources.JsonCommitSink"
 
   test("committed write is complete, visible, and staging is swept") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = TestSpark.tempDir("graft_sink").toString
     val df = spark.range(0, 1000, 1, 6)
       .select(col("id"), (col("id") * 2).cast("double").as("dbl"),
         concat(lit("s"), col("id")).as("str"),
@@ -34,7 +34,7 @@ class JsonCommitSinkSpec extends AnyFunSuite {
   }
 
   test("a failed job commits NOTHING (abort sweeps all staging)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_abort").toString
+    val dir = TestSpark.tempDir("graft_sink_abort").toString
     val df = spark.range(0, 1000, 1, 6).select(col("id"))
     val e = intercept[Exception] {
       df.write.format(fmt).option("path", dir)

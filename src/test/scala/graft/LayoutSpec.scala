@@ -25,7 +25,7 @@ class LayoutSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
 
   test("z-ordered files are z-contiguous and bound both dimensions") {
-    dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    dir = TestSpark.tempDir("graft_layout").toString
     val li = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
     sources.Layout.writeZOrdered(li, "l_partkey", "l_suppkey", s"$dir/z", 8)
@@ -64,7 +64,7 @@ class LayoutSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("compact glues small files, preserves data, swaps atomically") {
     import spark.implicits._
-    val cdir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val cdir = TestSpark.tempDir("graft_compact").toString + "/t"
     try {
       // 30 tiny appends — the shape a per-batch streaming append leaves
       (0 until 30).foreach { i =>
@@ -93,7 +93,7 @@ class LayoutSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // the EXACT on-disk state a kill -9 mid-compact leaves behind: the
     // maintenance lock (holder string with a dead pid) AND the
     // half-written _compact_tmp dir, original data untouched
-    val base = java.nio.file.Files.createTempDirectory("graft_mkill").toString
+    val base = TestSpark.tempDir("graft_mkill").toString
     try {
       val mdir = s"$base/store"
       (0 until 5).foreach { i =>
@@ -137,7 +137,7 @@ class LayoutSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("the maintenance lock excludes a second job, releases on both exits") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_mlock").toString
+    val base = TestSpark.tempDir("graft_mlock").toString
     try {
       val mdir = s"$base/store"
       Seq((1L, "a")).toDF("id", "v").write.parquet(mdir)

@@ -19,7 +19,7 @@ class LmScoreSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("common continuations outscore rare ones, at predicted values") {
     import spark.implicits._
-    dir = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    dir = TestSpark.tempDir("graft_lm").toString
     // history "h" has 10 total continuations: 8 distinct rare words
     // (count 1 each) and one word "c" seen twice
     val docs =

@@ -14,8 +14,7 @@ class LocalCorpusPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("the corpus lifecycle composition holds every gate law on sf0.01") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_corpus_pipeline_spec").toString
+    val dir = TestSpark.tempDir("graft_corpus_pipeline_spec").toString
     try {
       val s = graft.jobs.LocalCorpusPipelineMain.run(spark, dir,
         "/root/testdata/sf0.01")

@@ -38,7 +38,7 @@ class LocalFsSpec extends AnyFunSuite {
   private lazy val graft = context(classOf[GraftLocalFs].getName)
   private lazy val both = Seq("stock" -> stock, "graft" -> graft)
 
-  private def tempDir(): String = Files.createTempDirectory("graft_localfs").toString
+  private def tempDir(): String = TestSpark.tempDir("graft_localfs").toString
   private def mode(p: String): Int =
     Files.getAttribute(Paths.get(p), "unix:mode").asInstanceOf[Int] & 0xfff
   private def setMode(p: String, m: String): Unit =
@@ -199,7 +199,7 @@ class LocalFsSpec extends AnyFunSuite {
     */
   private def checkpointSpawns(body: => Unit): Int = {
     val rec = new jdk.jfr.Recording()
-    val file = Files.createTempFile("graft_spawns", ".jfr")
+    val file = TestSpark.tempFile("graft_spawns", ".jfr")
     try {
       rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()

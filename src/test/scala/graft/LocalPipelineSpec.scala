@@ -14,8 +14,7 @@ class LocalPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("the composed pipeline holds its laws end-to-end on local files") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_local_pipeline").toString
+    val dir = TestSpark.tempDir("graft_local_pipeline").toString
     try {
       val s = graft.jobs.LocalPipelineMain.run(spark, dir, rows = 2000)
       assert(s.generated == 2000)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import scala.sys.process._
 
 import org.apache.spark.sql.functions._
@@ -33,7 +31,7 @@ class MultimodalArrowSpec extends AnyFunSuite {
   // PySpark startup is paid once. Lazily launched so a cancelled
   // suite never forks Python at all.
   private lazy val outDir: String = {
-    val dir = Files.createTempDirectory("graft-arrow").toString
+    val dir = TestSpark.tempDir("graft-arrow").toString
     val log = new StringBuilder
     val exit = Process(
       Seq("python3", MultimodalArrow.scriptPath, sf01, dir),

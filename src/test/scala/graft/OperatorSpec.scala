@@ -425,7 +425,7 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     // docs of EVERY length 1..80 words: covers n<W, n=W, n=W+1, the
     // stride boundaries (n=W+kS, W+kS+1), and multi-chunk remainders
-    val dir = java.nio.file.Files.createTempDirectory("graft_chunk").toString
+    val dir = TestSpark.tempDir("graft_chunk").toString
     try {
       (1 to 80).map { n =>
         (n.toLong, (1 to n).map(i => s"w$i").mkString(" "), "en", "src", 1L)
@@ -470,7 +470,7 @@ class OperatorSpec extends AnyFunSuite {
     // detectors cannot express this). The driver corpus's containment
     // pairs are all near-identical twins, so prove it synthetically.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
+    val dir = TestSpark.tempDir("graft_contain").toString
     try {
       val short = "alpha beta gamma delta epsilon zeta eta theta"
       val long = s"intro words before the quote $short and plenty of trailing " +

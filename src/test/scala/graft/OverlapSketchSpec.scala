@@ -10,14 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * known overlap (identical halves ~ full overlap, disjoint halves =
   * zero).
   */
-class OverlapSketchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+class OverlapSketchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
 
   private def run(dir: String) =
     operators.Corpus.overlapSketch.fn(spark, dir).collect().head
@@ -50,8 +44,7 @@ class OverlapSketchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll
 
   test("identical halves: intersection tracks the distinct counts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv_same").toString
-    dirs += dir
+    val dir = TestSpark.tempDir("graft_kmv_same").toString
     // even doc 2i and odd doc 2i+1 carry the SAME text -> both sides
     // have identical shingle sets -> intersection == each side
     val texts = (0 until 40).map(i =>
@@ -72,8 +65,7 @@ class OverlapSketchSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll
 
   test("disjoint halves: intersection estimates zero") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv_disj").toString
-    dirs += dir
+    val dir = TestSpark.tempDir("graft_kmv_disj").toString
     (0 until 80).map { i =>
       val side = i % 2
       (i.toLong, s"side$side doc $i tokens s${side}t${i}a s${side}t${i}b s${side}t${i}c",

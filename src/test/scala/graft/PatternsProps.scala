@@ -40,7 +40,7 @@ object PatternsProps extends Properties("Patterns") {
   }
 
   private def withCorpus[T](rows: List[(Long, String, Long)])(f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pat").toString
+    val dir = TestSpark.tempDir("graft_pat").toString
     try {
       writeEvents(rows.map { case (u, t, m) => (t, u, m) }, dir)
       f(dir)

@@ -41,7 +41,7 @@ object PrefixJaccardProps extends Properties("PrefixJaccard") {
   property("equals brute-force Jaccard on random corpora") =
     forAllNoShrink(corpus) { docs =>
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_pfx_prop").toString
+      val dir = TestSpark.tempDir("graft_pfx_prop").toString
       try {
         docs.zipWithIndex.map { case (ws, i) =>
           val t = ws.mkString(" ")

@@ -111,13 +111,21 @@ class RuntimeSpec extends AnyFunSuite {
         s"${f.name} was re-registered"))
   }
 
-  test("GraftRuntime is the only file under src that builds a session") {
-    val needle = "SparkSession." + "builder"
-    val files = Files.walk(Paths.get("src")).iterator().asScala
+  /** Names of the `.scala` files under `dir` whose text contains `needle`. */
+  private def filesNaming(dir: String, needle: String): Seq[String] = {
+    val files = Files.walk(Paths.get(dir)).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty)
-    val builders = files.filter(p => Files.readString(p).contains(needle))
+    files.filter(p => Files.readString(p).contains(needle))
       .map((p: Path) => p.getFileName.toString)
-    assert(builders == Seq("GraftRuntime.scala"))
+  }
+
+  test("GraftRuntime is the only file under src that builds a session") {
+    assert(filesNaming("src", "SparkSession." + "builder") == Seq("GraftRuntime.scala"))
+  }
+
+  test("GraftRuntime is the only file under src/main that names the state-store provider") {
+    assert(filesNaming("src/main", "stateStore." + "providerClass") ==
+      Seq("GraftRuntime.scala"))
   }
 }

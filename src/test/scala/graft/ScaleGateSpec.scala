@@ -115,7 +115,7 @@ class ScaleGateSpec extends AnyFunSuite {
   }
 
   test("a pre-r15 factor-only stamp is treated as unstamped and upgraded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scale_up")
+    val dir = TestSpark.tempDir("graft_scale_up")
     try {
       // old-format stamp (factor only, source unknowable) + a leftover
       // table: the derivation must NOT trust either — full re-derive,

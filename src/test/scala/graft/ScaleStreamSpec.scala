@@ -19,8 +19,7 @@ class ScaleStreamSpec extends AnyFunSuite {
 
   test("all three index-backed loops hold their laws on the 3x tier") {
     ScaleCorpus.ensure(spark, src, out, copies)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_scalestream_spec").toString
+    val work = TestSpark.tempDir("graft_scalestream_spec").toString
     try {
       val results = ScaleStream.runAll(spark, out, copies, slices = 2, work)
       assert(results.map(_.loop) == Seq("B18_docstream",

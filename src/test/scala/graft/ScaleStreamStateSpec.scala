@@ -19,8 +19,7 @@ class ScaleStreamStateSpec extends AnyFunSuite {
 
   test("all stateful loops (incl. the restart rehearsals) hold their laws on the 3x tier under RocksDB") {
     ScaleCorpus.ensure(spark, src, out, copies)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_scalestream_state_spec").toString
+    val work = TestSpark.tempDir("graft_scalestream_state_spec").toString
     try {
       val results = ScaleStreamState.runAll(spark, out, copies, slices = 3, work)
       assert(results.map(_.loop) == Seq("B19_sessionize_tws",

@@ -17,7 +17,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def mixedDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString
+    val dir = TestSpark.tempDir("graft-evo").toString
     // v1 files: (id, a); v2 files add column b
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .coalesce(1).write.mode("append").parquet(dir)

@@ -16,7 +16,7 @@ class ScoreStreamSpec extends AnyFunSuite {
   test("stream scoring equals batch classify_nb; OOV rides the corr9 term") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_score").toString
+    val dir = TestSpark.tempDir("graft_score").toString
     try {
       val (model, consts) = operators.Select.nbArtifacts(spark, d)
       val corpus = Tables.documents(spark, d).select("doc_id", "text")
@@ -61,7 +61,7 @@ class ScoreStreamSpec extends AnyFunSuite {
 
   test("a replayed batch replaces its output instead of duplicating it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_score2").toString
+    val dir = TestSpark.tempDir("graft_score2").toString
     try {
       val (model, consts) = operators.Select.nbArtifacts(spark, d)
       val batch = Tables.documents(spark, d).select("doc_id", "text").limit(3)

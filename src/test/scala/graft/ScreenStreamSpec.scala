@@ -11,21 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `decontaminate_winnow`, sharing its fingerprint expression so the
   * two cannot drift.
   */
-class ScreenStreamSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class ScreenStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.sfDir
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_ss_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { d =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(d)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_ss_$tag").toString
 
   test("the live fingerprint expression IS the batch text_winnow fingerprint set") {
     val live = Tables.documents(spark, d)

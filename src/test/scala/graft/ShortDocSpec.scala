@@ -17,7 +17,7 @@ class ShortDocSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("identical short docs are found by the shingle dedup family") {
     import spark.implicits._
-    dir = java.nio.file.Files.createTempDirectory("graft_short").toString
+    dir = TestSpark.tempDir("graft_short").toString
     Seq(
       (0L, "tiny doc", "en", "srcA", 8L),
       (1L, "tiny doc", "en", "srcB", 8L), // exact 2-word duplicate of 0

@@ -25,7 +25,7 @@ object SkylineProps extends Properties("Skyline") {
   property("equals the brute-force dominance reference") =
     forAllNoShrink(caseGen) { points =>
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_sky").toString
+      val dir = TestSpark.tempDir("graft_sky").toString
       try {
         val rows = points.zipWithIndex.map { case ((price, day), id) =>
           (id.toLong, 0L, "O", price,

@@ -16,7 +16,7 @@ class SubstringSpec extends AnyFunSuite {
   /** Run dedup_substring over an ad-hoc documents table. */
   private def spansOf(docs: Seq[(Long, String)]): Set[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_substr").toString
+    val dir = TestSpark.tempDir("graft_substr").toString
     try {
       docs.map { case (id, text) => (id, text, "en", "src", text.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -47,7 +47,7 @@ class SubstringSpec extends AnyFunSuite {
     // the fixed-granularity operator misses it: word-8 segments of A
     // and B never line up (offsets differ by 2 mod 8)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_substr_seg").toString
+    val dir = TestSpark.tempDir("graft_substr_seg").toString
     try {
       Seq((1L, docA, "en", "src", docA.length.toLong),
         (2L, docB, "en", "src", docB.length.toLong))

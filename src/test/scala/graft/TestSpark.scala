@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -10,6 +13,24 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The one directory every suite's scratch files and dirs live
+    * under, made on first use and deleted with everything in it when
+    * the test JVM exits, so a run leaves nothing behind in the system
+    * temp dir (sibling files such as an index's `<dir>.maxid` too).
+    */
+  private lazy val tmpRoot: Path = {
+    val root = Files.createTempDirectory("graft_test")
+    sys.addShutdownHook(FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A new empty directory under the per-JVM temp root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tmpRoot, prefix)
+
+  /** A new empty file under the per-JVM temp root. */
+  def tempFile(prefix: String, suffix: String): Path =
+    Files.createTempFile(tmpRoot, prefix, suffix)
 
   /** Set session confs for `body`, restoring previous values (or
     * unsetting) afterwards. Safe because suites run sequentially in

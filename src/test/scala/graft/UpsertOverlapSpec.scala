@@ -24,20 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * torn mix of half-written files, duplicate keys, or a view regressed
   * below the prior snapshot.
   */
-class UpsertOverlapSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class UpsertOverlapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def tmp(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_ov_$tag").toString
-    dirs += p; p
-  }
-
-  override def afterAll(): Unit = dirs.foreach { dd =>
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(dd)).deleteRecursively()
-  }
+  private def tmp(tag: String): String =
+    TestSpark.tempDir(s"graft_ov_$tag").toString
 
   private def view(path: String): Map[String, (Long, String)] =
     spark.read.parquet(path).collect()

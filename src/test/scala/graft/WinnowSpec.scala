@@ -19,7 +19,7 @@ class WinnowSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("shared runs guarantee a shared fingerprint; density ~ 2/(w+1)") {
     import spark.implicits._
-    dir = java.nio.file.Files.createTempDirectory("graft_winnow").toString
+    dir = TestSpark.tempDir("graft_winnow").toString
     // docs 0 and 1: disjoint word streams EXCEPT a shared 8-token run
     // (>= w + 2 = 6 tokens, so one full window fits inside it)
     val run = "alpha beta gamma delta epsilon zeta eta theta"
@@ -50,7 +50,7 @@ class WinnowSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("dedup_winnow pairs docs sharing a long run and matches a brute-force sweep") {
     import spark.implicits._
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_winnow2").toString
+    val dir2 = TestSpark.tempDir("graft_winnow2").toString
     try {
       // docs 0/1 share a 12-token run — long enough for >= 2 windows,
       // so they must share >= WinnowMinShared = 2 fingerprints and pair

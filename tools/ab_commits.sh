@@ -26,10 +26,11 @@
 #
 #   perfbench/compare.py <parent results> --vs <change results>
 #
-# (quartiles, change against the bound, host CPU steal), then, per
-# end-to-end metric, in how many pairs the change read lower. The
-# per-run result files are kept under the printed directory; the trees
-# are deleted on exit. Run from anywhere inside the repository.
+# (quartiles, change against the bound, host CPU steal), then which
+# commit was built first (into t1) and, per end-to-end metric, in how
+# many pairs the change read lower. The per-run result files are kept
+# under the printed directory; the trees are deleted on exit. Run from
+# anywhere inside the repository.
 set -euo pipefail
 
 if [ $# -ne 5 ]; then
@@ -43,7 +44,7 @@ work=$(mktemp -d "${TMPDIR:-/tmp}/ab_commits.XXXXXX")
 trap 'rm -rf "$work/t1" "$work/t2" "$work/swap"' EXIT
 
 declare -A tree
-if ((seed0 % 2 == 0)); then tree[parent]=t1 tree[change]=t2; else tree[change]=t1 tree[parent]=t2; fi
+if ((seed0 % 2 == 0)); then tree[parent]=t1 tree[change]=t2 first=parent; else tree[change]=t1 tree[parent]=t2 first=change; fi
 for t in t1 t2; do
   for arm in parent change; do
     [ "${tree[$arm]}" = "$t" ] || continue
@@ -88,7 +89,7 @@ echo "[ab] results: $work/results/{parent,change}" >&2
 rc=0
 python3 "$work/${tree[parent]}/perfbench/compare.py" "$work/results/parent" \
   --vs "$work/results/change" || rc=$?
-python3 - "$work/results" <<'EOF'
+python3 - "$work/results" "$first = $(git -C "$repo" rev-parse --short "${!first}")" <<'EOF'
 import glob, json, os, sys
 runs = {}
 for arm in ("parent", "change"):
@@ -96,6 +97,7 @@ for arm in ("parent", "change"):
         r = json.load(open(f))
         runs.setdefault(arm, {})[r["stamp"]["seed"]] = r["end_to_end"]
 seeds = sorted(runs["parent"].keys() & runs["change"].keys())
+print(f"built first (into t1): {sys.argv[2]}")
 for m in ("setup_s", "pass_cpu_s", "rss_peak_mb"):
     lower = sum(runs["change"][s][m] < runs["parent"][s][m] for s in seeds)
     print(f"{m:16} change lower in {lower}/{len(seeds)} pairs")
