@@ -41,14 +41,6 @@ object ScaleStream {
 
   import ScaleGate.Check
 
-  private def check(q: String, inv: String, pass: Boolean, detail: String) =
-    Check(q, inv, pass, detail)
-
-  /** Write the scaled table's replicas 1..copies-1 as `slices`
-    * single-file backlog parquets in replica order (sequential writes
-    * → monotone mtimes → the file source's one-file-per-trigger
-    * batches arrive in id order). Returns the arrival count.
-    */
   /** Expected banded-join candidate rows for a batch of `arrBandRows`
     * arrival band rows against the current index, assuming arrivals
     * hash proportionally to the index buckets (exact for the
@@ -67,6 +59,49 @@ object ScaleStream {
     else (arrBandRows.toDouble * sumSq / idxRows).toLong
   }
 
+  /** The one backlog writer: clear `outDir`, then write each frame as
+    * one single-file slice `slice_<k>.parquet`, in order, with mtimes
+    * that rise by one second per slice and all lie in the past — so
+    * a one-file-per-trigger file source ([[backlogStream]]) delivers
+    * slice k as batch k. Returns each slice's row count, read back
+    * from the written file.
+    */
+  private[graft] def writeSlices(outDir: String,
+      frames: Seq[DataFrame]): Seq[Long] = {
+    val out = java.nio.file.Paths.get(outDir)
+    org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    java.nio.file.Files.createDirectories(out)
+    // anchor slice mtimes in the past so every assigned stamp is both
+    // strictly increasing AND never ahead of the wall clock
+    val mtimeBase = System.currentTimeMillis() - (frames.size + 1) * 1000L
+    val tmp = s"$outDir/_slice_tmp"
+    frames.zipWithIndex.map { case (df, k) =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      require(part.length == 1, s"expected one part file, got ${part.length}")
+      val target = out.resolve(f"slice_$k%04d.parquet")
+      java.nio.file.Files.move(part(0).toPath, target)
+      // Explicit strictly-increasing mtimes (r15 advice): sequential
+      // writes give monotone mtimes only at the filesystem's timestamp
+      // resolution — fast slices on a second-granularity fs can share
+      // an mtime, and FileStreamSource's timestamp sort would then
+      // depend on listing order to keep slices in order (for the
+      // id-ordered backlogs a loud IdWatermark trip, but a confusing
+      // one). One second per slice makes the ordering independent of
+      // fs resolution.
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(mtimeBase + k * 1000L))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      df.sparkSession.read.parquet(target.toString).count()
+    }
+  }
+
+  /** Write the scaled table's replicas 1..copies-1 as `slices`
+    * single-file backlog parquets in replica order (so the file
+    * source's one-file-per-trigger batches arrive in id order).
+    * Returns the arrival count.
+    */
   private[graft] def writeBacklog(spark: SparkSession, src: String,
       idCol: String, cols: Seq[String], outDir: String, copies: Int,
       slices: Int): Long = {
@@ -78,44 +113,77 @@ object ScaleStream {
       DiskGuard.dirBytes(src),
       "point SPARK_GRAFT_STREAM_WORK at a larger volume or lower " +
         "SPARK_GRAFT_SCALE_COPIES"))
-    val out = java.nio.file.Paths.get(outDir)
-    org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-    java.nio.file.Files.createDirectories(out)
-    val streamReplicas = copies - 1
-    val perSlice = math.max(1, math.ceil(streamReplicas.toDouble / slices).toInt)
+    val perSlice = math.max(1, math.ceil((copies - 1).toDouble / slices).toInt)
     val table = spark.read.parquet(src).select(cols.map(col): _*)
-    // anchor slice mtimes in the past so every assigned stamp is both
-    // strictly increasing AND never ahead of the wall clock
-    val sliceMtimeBase = System.currentTimeMillis() - (slices + 1) * 1000L
-    var arrivals = 0L
-    var k = 1
-    var slice = 0
-    while (k < copies) {
-      val hi = math.min(copies, k + perSlice)
-      val df = table.filter(col(idCol) >= k * step && col(idCol) < hi * step)
-      val tmp = s"$outDir/_slice_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      require(part.length == 1, s"expected one part file, got ${part.length}")
-      val target = out.resolve(f"slice_$slice%04d.parquet")
-      java.nio.file.Files.move(part(0).toPath, target)
-      // Explicit strictly-increasing mtimes (r15 advice): sequential
-      // writes give monotone mtimes only at the filesystem's timestamp
-      // resolution — fast slices on a second-granularity fs can share
-      // an mtime, and FileStreamSource's timestamp sort would then
-      // depend on listing order to keep slices in id order (a loud
-      // IdWatermark trip, but a confusing one). One second per slice
-      // makes the ordering independent of fs resolution.
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(
-          sliceMtimeBase + slice * 1000L))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      arrivals += spark.read.parquet(target.toString).count()
-      k = hi
-      slice += 1
-    }
-    arrivals
+    writeSlices(outDir, (1 until copies by perSlice).map { k =>
+      table.filter(col(idCol) >= k * step &&
+        col(idCol) < math.min(copies, k + perSlice) * step)
+    }).sum
+  }
+
+  /** A backlog directory as a stream that ingests one file per
+    * trigger, in mtime order.
+    */
+  private[graft] def backlogStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** Per-batch progress captured from the engine's own listener:
+    * (batchId, input rows, wall ms) for every batch with input, plus
+    * the peak and the last state-store rows (sum of numRowsTotal
+    * across stateful operators; 0 for a stateless loop).
+    */
+  private final class ProgressListener
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    @volatile var peakStateRows = 0L
+    @volatile var finalStateRows = 0L
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    override def onQueryStarted(
+        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(
+        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
+      synchronized {
+        val p = e.progress
+        if (p.numInputRows > 0)
+          rows += ((p.batchId, p.numInputRows, p.batchDuration))
+        val st = p.stateOperators.map(_.numRowsTotal).sum
+        peakStateRows = math.max(peakStateRows, st)
+        finalStateRows = st
+      }
+    override def onQueryTerminated(
+        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
+      terminated.countDown()
+  }
+
+  /** What one replay of a backlog observed. */
+  final case class Replay(wallSec: Double, perBatch: Seq[(Long, Long, Long)],
+      peakStateRows: Long, finalStateRows: Long) {
+    def result(loop: String, copies: Int, arrivals: Long,
+        checks: Seq[Check]): LoopResult =
+      LoopResult(loop, copies, arrivals, perBatch.size, wallSec, perBatch, checks)
+  }
+
+  /** The one replay driver: start a query over [[backlogStream]] of
+    * `backlogDir`, wait for it to drain (the starter sets the
+    * trigger), and return the timed progress. Listener events arrive
+    * on an asynchronous bus, so the driver also waits (bounded) for
+    * the query's terminated event, which the bus delivers after every
+    * progress event of that query.
+    */
+  private[graft] def drive(spark: SparkSession, backlogDir: String,
+      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Replay = {
+    val src = backlogStream(spark, backlogDir)
+    val listener = new ProgressListener
+    spark.streams.addListener(listener)
+    val t0 = System.nanoTime()
+    try {
+      start(src).awaitTermination()
+      val wallSec = (System.nanoTime() - t0) / 1e9
+      listener.terminated.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      Replay(wallSec, listener.rows.toSeq,
+        listener.peakStateRows, listener.finalStateRows)
+    } finally spark.streams.removeListener(listener)
   }
 
   /** The post-run law suite over a loop's collected verdict frame
@@ -143,10 +211,10 @@ object ScaleStream {
     val cyclic = verdicts.filter(col("partner_id").isNotNull &&
       col("partner_id") >= col(idCol)).count()
     val base = Seq(
-      check(loop, "verdict conservation: one row per streamed arrival, ids unique",
+      Check(loop, "verdict conservation: one row per streamed arrival, ids unique",
         rows == arrivals && distinct == rows,
         s"rows=$rows distinct=$distinct arrivals=$arrivals"),
-      check(loop, "first-copy-wins acyclicity: partner < id",
+      Check(loop, "first-copy-wins acyclicity: partner < id",
         cyclic == 0, s"violations=$cyclic"))
     if (!replicaLaws) base
     else {
@@ -162,7 +230,7 @@ object ScaleStream {
         .groupBy(expr(s"$idCol div $step").as("replica"))
         .agg(count(lit(1)).as("d")).collect().map(_.getLong(1))
       base :+
-        check(loop, "replica containment: every partner lives in its doc's replica",
+        Check(loop, "replica containment: every partner lives in its doc's replica",
           crossReplica == 0,
           s"cross_replica_pairs=$crossReplica " +
             s"per_replica_dups=[${perReplica.sorted.mkString(",")}] " +
@@ -182,34 +250,15 @@ object ScaleStream {
     val ghosts = verdicts.filter(col("partner_id").isNotNull)
       .select(col("partner_id").as(idCol))
       .join(seen.select(idCol), Seq(idCol), "left_anti").count()
-    check(loop, "every partner is a seen id (bootstrap or streamed arrival)",
+    Check(loop, "every partner is a seen id (bootstrap or streamed arrival)",
       ghosts == 0, s"ghost_partners=$ghosts")
   }
 
   private[graft] def growthLaw(loop: String, store: String,
       acceptedAfter: Long, bootstrap: Long, survivors: Long): Check =
-    check(loop, s"$store grows by survivors only (after = bootstrap + survivors)",
+    Check(loop, s"$store grows by survivors only (after = bootstrap + survivors)",
       acceptedAfter == bootstrap + survivors,
       s"after=$acceptedAfter bootstrap=$bootstrap survivors=$survivors")
-
-  /** Per-batch progress captured from the engine's own listener —
-    * batchId, input rows, wall ms.
-    */
-  private final class ProgressListener
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-      synchronized {
-        if (e.progress.numInputRows > 0)
-          rows += ((e.progress.batchId, e.progress.numInputRows,
-            e.progress.batchDuration))
-      }
-    override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-  }
 
   final case class LoopResult(loop: String, copies: Int, arrivals: Long,
     batches: Int, wallSec: Double, perBatchMs: Seq[(Long, Long, Long)],
@@ -235,22 +284,9 @@ object ScaleStream {
     val backlogDir = s"$work/backlog_$loop"
     val arrivals = writeBacklog(spark, src, idCol, cols, backlogDir,
       copies, slices)
-    val schema = spark.read.parquet(backlogDir).schema
-    val listener = new ProgressListener
-    spark.streams.addListener(listener)
-    val t0 = System.nanoTime()
-    // The one-file-per-trigger batch = one-core hazard is handled by
-    // the PRODUCTION seam now (r15 verdict #3): the starters take
-    // batchPartitions and apply it inside the loop body (BatchPar) —
-    // the rehearsal drives the exact wiring a file-source deployment
-    // uses, not a harness-side patch over it.
-    val q = start(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(backlogDir),
-      s"$work/ckpt_$loop")
-    try q.awaitTermination()
-    finally spark.streams.removeListener(listener)
-    val wall = (System.nanoTime() - t0) / 1e9
+    // the starters spread each one-file batch themselves (BatchPar),
+    // so the rehearsal drives the exact wiring a file-fed loop uses
+    val replay = drive(spark, backlogDir, start(_, s"$work/ckpt_$loop"))
     val verdicts = spark.read.parquet(verdictsDir)
     val laws = streamLaws(loop, verdicts, idCol, arrivals, step, replicaLaws)
     val partnerLaw = partnerSeenLaw(loop, verdicts, idCol,
@@ -258,8 +294,7 @@ object ScaleStream {
         .unionByName(verdicts.select(col(idCol))))
     val survivors = verdicts.filter(col("partner_id").isNull).count()
     val growth = growthLaw(loop, store, acceptedAfter(), nBoot, survivors)
-    LoopResult(loop, copies, arrivals, listener.rows.size, wall,
-      listener.rows.toSeq, laws ++ Seq(partnerLaw, growth))
+    replay.result(loop, copies, arrivals, laws ++ Seq(partnerLaw, growth))
   }
 
   def main(args: Array[String]): Unit = {
@@ -303,9 +338,6 @@ object ScaleStream {
       allChecks, sys.env.get("SPARK_GRAFT_STREAM_OUT"))
   }
 
-  /** The three loops, shared by the main (100x) and ScaleStreamSpec
-    * (3x inside `sbt test`).
-    */
   /** Tier cap for the FLAT emb loop (B25): it is the registered
     * measured-quadratic BASELINE — every arriving vector's band bucket
     * grows with the whole accepted index, the degeneration the blocked
@@ -319,6 +351,9 @@ object ScaleStream {
     */
   private[graft] val FlatLoopMaxCopies = 10
 
+  /** The three loops, shared by the main (100x) and ScaleStreamSpec
+    * (3x inside `sbt test`).
+    */
   private[graft] def runAll(spark: SparkSession, scaledDir: String,
       copies: Int, slices: Int, work: String,
       onLoop: LoopResult => Unit = _ => ()): Seq[LoopResult] = {
@@ -332,8 +367,7 @@ object ScaleStream {
       },
       (src, ckpt) => DocStream.dedupIndexedStream(
         src, s"$work/doc_index", s"$work/doc_verdicts", ckpt,
-        trigger = Trigger.AvailableNow(),
-        batchPartitions = Some(spark.sparkContext.defaultParallelism)),
+        trigger = Trigger.AvailableNow()),
       () => spark.read.parquet(s"$work/doc_index")
         .select("doc_id").distinct().count(),
       s"$work/doc_verdicts", "signature index (distinct doc ids)",
@@ -373,8 +407,7 @@ object ScaleStream {
             "carries the full tier) or free disk under SPARK_GRAFT_STREAM_WORK"))
         EmbStream.dedupIndexedStream(
           src, s"$work/emb_band", s"$work/emb_vec",
-          s"$work/emb_verdicts", ckpt, trigger = Trigger.AvailableNow(),
-          batchPartitions = Some(spark.sparkContext.defaultParallelism))
+          s"$work/emb_verdicts", ckpt, trigger = Trigger.AvailableNow())
       },
       () => spark.read.parquet(s"$work/emb_vec").count(),
       s"$work/emb_verdicts", "accepted-vector store",
@@ -392,8 +425,7 @@ object ScaleStream {
       },
       (src, ckpt) => EmbStream.dedupIndexedStreamBlocked(
         src, s"$work/blk_cent", s"$work/blk_band", s"$work/blk_vec",
-        s"$work/blk_verdicts", ckpt, trigger = Trigger.AvailableNow(),
-        batchPartitions = Some(spark.sparkContext.defaultParallelism)),
+        s"$work/blk_verdicts", ckpt, trigger = Trigger.AvailableNow()),
       () => spark.read.parquet(s"$work/blk_vec").count(),
       s"$work/blk_verdicts", "accepted-vector store",
       replicaLaws = false,

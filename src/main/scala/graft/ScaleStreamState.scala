@@ -61,10 +61,7 @@ import graft.streaming._
 object ScaleStreamState {
 
   import ScaleGate.Check
-  import ScaleStream.LoopResult
-
-  private def check(q: String, inv: String, pass: Boolean, detail: String) =
-    Check(q, inv, pass, detail)
+  import ScaleStream.{LoopResult, drive}
 
   private[graft] val FlushUser = -1L
   private val HourMs = 3600000L
@@ -90,47 +87,17 @@ object ScaleStreamState {
       DiskGuard.dirBytes(s"$scaledDir/events.parquet"),
       "point SPARK_GRAFT_STREAM_WORK at a larger volume or lower " +
         "SPARK_GRAFT_SCALE_COPIES"))
-    val out = java.nio.file.Paths.get(outDir)
-    org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-    java.nio.file.Files.createDirectories(out)
-    // Tables.events normalizes the physical ts encoding (nanos-long
-    // vs TIMESTAMP_NTZ — derived corpora may carry either)
-    val ev = Tables.events(spark, scaledDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        Tables.eventTsMs.as("ms"))
-    val bounds = ev.agg(min("ms"), max("ms"), count(lit(1))).head()
-    val (lo, hi, n) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
+    val ev = eventsMs(spark, scaledDir)
+    val bounds = ev.agg(min("ms"), max("ms")).head()
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val width = math.max(1L, (hi - lo) / slices + 1)
-    val base = System.currentTimeMillis() - (slices + 3) * 1000L
-    def writeSlice(df: DataFrame, idx: Int): Unit = {
-      val tmp = s"$outDir/_slice_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      require(part.length == 1, s"expected one part file, got ${part.length}")
-      val target = out.resolve(f"slice_$idx%04d.parquet")
-      java.nio.file.Files.move(part(0).toPath, target)
-      // strictly increasing mtimes independent of fs resolution (the
-      // same r15-advice discipline as the dedup backlog)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(base + idx * 1000L))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
-    (0 until slices).foreach { i =>
+    val data = (0 until slices).map { i =>
       val sLo = lo + i * width
       val sHi = if (i == slices - 1) hi + 1 else sLo + width
-      writeSlice(ev.filter(col("ms") >= sLo && col("ms") < sHi), i)
+      ev.filter(col("ms") >= sLo && col("ms") < sHi)
     }
-    import spark.implicits._
-    // flush 1: 48 h past the corpus clears every deadline (CEP's are
-    // firstStage + 24 h, the farthest); flush 2 is the data batch the
-    // timers then fire in
-    Seq((-1L, FlushUser, "flush", hi + 48 * HourMs),
-      (-2L, FlushUser, "flush", hi + 49 * HourMs)).zipWithIndex.foreach {
-      case ((id, u, tpe, ms), k) =>
-        writeSlice(Seq((id, u, tpe, ms))
-          .toDF("event_id", "user_id", "event_type", "ms"), slices + k)
-    }
+    val n = ScaleStream.writeSlices(outDir, data ++ flushSlices(spark, hi))
+      .take(slices).sum
     require(n > 0, s"empty events table under $scaledDir")
     (n, width)
   }
@@ -147,12 +114,7 @@ object ScaleStreamState {
   private[graft] def writePacedBacklog(spark: SparkSession,
       scaledDir: String, outDir: String, spanMs: Long, sliceMs: Long)
       : (Long, Long, Long) = {
-    val out = java.nio.file.Paths.get(outDir)
-    org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-    java.nio.file.Files.createDirectories(out)
-    val ev = Tables.events(spark, scaledDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        Tables.eventTsMs.as("ms"))
+    val ev = eventsMs(spark, scaledDir)
     val mn = ev.agg(min("ms")).head.getLong(0)
     // bucket-align the span so slices coincide with the audit's
     // epoch-aligned buckets (a misaligned slice would straddle three)
@@ -161,35 +123,34 @@ object ScaleStreamState {
     val slices = (spanMs / sliceMs).toInt
     require(spanMs % sliceMs == 0 && slices >= 2,
       s"span $spanMs must be a multiple >= 2 of slice $sliceMs")
-    val base = System.currentTimeMillis() - (slices + 3) * 1000L
-    var arrivals = 0L
-    def writeSlice(df: DataFrame, idx: Int): Unit = {
-      val tmp = s"$outDir/_slice_tmp"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      require(part.length == 1, s"expected one part file, got ${part.length}")
-      val target = out.resolve(f"slice_$idx%04d.parquet")
-      java.nio.file.Files.move(part(0).toPath, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(base + idx * 1000L))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
-    (0 until slices).foreach { i =>
+    val data = (0 until slices).map { i =>
       val sLo = lo + i * sliceMs
-      val df = ev.filter(col("ms") >= sLo && col("ms") < sLo + sliceMs)
-      arrivals += df.count()
-      writeSlice(df, i)
+      ev.filter(col("ms") >= sLo && col("ms") < sLo + sliceMs)
     }
-    import spark.implicits._
-    Seq((-1L, FlushUser, "flush", hi + 48 * HourMs),
-      (-2L, FlushUser, "flush", hi + 49 * HourMs)).zipWithIndex.foreach {
-      case ((id, u, tpe, ms), k) =>
-        writeSlice(Seq((id, u, tpe, ms))
-          .toDF("event_id", "user_id", "event_type", "ms"), slices + k)
-    }
+    val arrivals = ScaleStream.writeSlices(outDir, data ++ flushSlices(spark, hi))
+      .take(slices).sum
     require(arrivals > 0, s"no events in the paced span [$lo, $hi)")
     (arrivals, lo, hi)
+  }
+
+  // Tables.events normalizes the physical ts encoding (nanos-long vs
+  // TIMESTAMP_NTZ — derived corpora may carry either)
+  private def eventsMs(spark: SparkSession, scaledDir: String): DataFrame =
+    Tables.events(spark, scaledDir)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        Tables.eventTsMs.as("ms"))
+
+  /** The two flush sentinel slices that close an events backlog whose
+    * last event is at `hiMs`: flush 1, 48 h past the corpus, clears
+    * every deadline (CEP's are firstStage + 24 h, the farthest); flush
+    * 2 is the data batch the timers then fire in.
+    */
+  private def flushSlices(spark: SparkSession, hiMs: Long): Seq[DataFrame] = {
+    import spark.implicits._
+    Seq((-1L, hiMs + 48 * HourMs), (-2L, hiMs + 49 * HourMs)).map {
+      case (id, ms) => Seq((id, FlushUser, "flush", ms))
+        .toDF("event_id", "user_id", "event_type", "ms")
+    }
   }
 
   /** The `q_state_sizing` peak formula (Stats.scala peakPair: max over
@@ -231,7 +192,7 @@ object ScaleStreamState {
     val extra = streamed.except(expected).count()
     val missing = expected.except(streamed).count()
     val n = streamed.count()
-    check(loop, inv, extra == 0 && missing == 0 && n > 0,
+    Check(loop, inv, extra == 0 && missing == 0 && n > 0,
       s"rows=$n stream_only=$extra batch_only=$missing")
   }
 
@@ -242,7 +203,7 @@ object ScaleStreamState {
       case "<=" => observed <= projected && observed > 0
       case _ => observed == projected
     }
-    check(loop, s"state rows vs q_state_sizing $component (observed $op projected)",
+    Check(loop, s"state rows vs q_state_sizing $component (observed $op projected)",
       pass, s"observed=$observed projected=$projected")
   }
 
@@ -251,7 +212,7 @@ object ScaleStreamState {
     */
   private[graft] def closedHourLaw(loop: String, verdictRows: Long,
       userHours: Long, users: Long): Check =
-    check(loop, "closed-hour conservation: verdicts = user-hours - open finals",
+    Check(loop, "closed-hour conservation: verdicts = user-hours - open finals",
       verdictRows == userHours - users && verdictRows > 0,
       s"verdicts=$verdictRows user_hours=$userHours users=$users")
 
@@ -272,10 +233,10 @@ object ScaleStreamState {
       .filter(col("prev_end").isNotNull && col("startTs") <= col("prev_end"))
       .count()
     Seq(
-      check(loop, "matches are full in-window ordered patterns; timeouts are partial",
+      Check(loop, "matches are full in-window ordered patterns; timeouts are partial",
         badMatch == 0 && badTimeout == 0,
         s"bad_matches=$badMatch bad_timeouts=$badTimeout"),
-      check(loop, "non-overlapping restarts: outcomes disjoint per key",
+      Check(loop, "non-overlapping restarts: outcomes disjoint per key",
         overlaps == 0, s"overlaps=$overlaps"))
   }
 
@@ -287,7 +248,7 @@ object ScaleStreamState {
     val violations = zeros
       .select(col("userId"), (col("windowStart") / BucketMs).cast("long").as("b"))
       .join(buckets, Seq("userId", "b"), "inner").count()
-    check(loop, "went-to-zero rows cover verifiably empty windows",
+    Check(loop, "went-to-zero rows cover verifiably empty windows",
       violations == 0, s"occupied_zero_windows=$violations")
   }
 
@@ -300,7 +261,7 @@ object ScaleStreamState {
     val misaligned = rows
       .filter(col("windowEnd") % BucketMs =!= 0 ||
         col("windowEnd") - col("windowStart") =!= BucketMs).count()
-    check(loop, "cadence: one row per (key, interval deadline), aligned windows",
+    Check(loop, "cadence: one row per (key, interval deadline), aligned windows",
       n == distinctDeadlines && misaligned == 0 && n > 0,
       s"rows=$n distinct=$distinctDeadlines misaligned=$misaligned")
   }
@@ -340,14 +301,14 @@ object ScaleStreamState {
       carried.select(col("source"), col("carried")),
       supply.select(col("source"), col("total").as("carried")))
     Seq(
-      check(loop, "verdict conservation: one row per streamed doc, ids unique",
+      Check(loop, "verdict conservation: one row per streamed doc, ids unique",
         rows == arrivals && ids == rows,
         s"rows=$rows distinct=$ids arrivals=$arrivals"),
-      check(loop, "kept iff pre-doc cumulative < budget (crossing doc kept)",
+      Check(loop, "kept iff pre-doc cumulative < budget (crossing doc kept)",
         keptRule == 0, s"violations=$keptRule"),
-      check(loop, "per-source prefix-sum consistency across micro-batches",
+      Check(loop, "per-source prefix-sum consistency across micro-batches",
         torn == 0, s"torn_sources=$torn"),
-      check(loop, "budget bounds: fill under budget+1 doc, exhausted sources filled",
+      Check(loop, "budget bounds: fill under budget+1 doc, exhausted sources filled",
         badFill == 0, s"violations=$badFill"),
       carriedLaw)
   }
@@ -427,49 +388,6 @@ object ScaleStreamState {
   // Runner
   // ------------------------------------------------------------------
 
-  /** Progress listener that also tracks state-store rows (sum of
-    * numRowsTotal across stateful operators) per batch.
-    */
-  private final class StateListener
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    @volatile var peakStateRows = 0L
-    @volatile var finalStateRows = 0L
-    override def onQueryStarted(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-      synchronized {
-        val p = e.progress
-        if (p.numInputRows > 0)
-          rows += ((p.batchId, p.numInputRows, p.batchDuration))
-        val st = p.stateOperators.map(_.numRowsTotal).sum
-        peakStateRows = math.max(peakStateRows, st)
-        finalStateRows = st
-      }
-    override def onQueryTerminated(
-        e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-  }
-
-  /** Drive one stateful loop over the shared backlog (under the
-    * session's RocksDB state store); returns the loop result plus
-    * (peak, final) observed state rows.
-    */
-  private def drive(spark: SparkSession, loop: String, backlogDir: String,
-      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
-      : (Double, Seq[(Long, Long, Long)], Long, Long) = {
-    val schema = spark.read.parquet(backlogDir).schema
-    val listener = new StateListener
-    spark.streams.addListener(listener)
-    val t0 = System.nanoTime()
-    try start(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(backlogDir)).awaitTermination()
-    finally spark.streams.removeListener(listener)
-    ((System.nanoTime() - t0) / 1e9, listener.rows.toSeq,
-      listener.peakStateRows, listener.finalStateRows)
-  }
-
   private def parsed(src: DataFrame): Dataset[ParsedEvent] = {
     val spark = src.sparkSession
     import spark.implicits._
@@ -495,9 +413,9 @@ object ScaleStreamState {
     def run(loop: String,
         start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery,
         laws: (Long, Long) => Seq[Check]): Unit = {
-      val (wall, perBatch, peak, fin) = drive(spark, loop, backlogDir, start)
-      val r = LoopResult(loop, copies, arrivals, perBatch.size, wall,
-        perBatch, laws(peak, fin))
+      val p = drive(spark, backlogDir, start)
+      val r = p.result(loop, copies, arrivals,
+        laws(p.peakStateRows, p.finalStateRows))
       results += r
       onLoop(r)
     }
@@ -527,15 +445,15 @@ object ScaleStreamState {
         equalityLaw(loop,
           "streamed gap sessions equal the registered q_sessionize batch query",
           streamed, batch),
-        check(loop,
+        Check(loop,
           "event conservation: session sizes sum to the arrivals",
           conserved == arrivals, s"sum_n=$conserved arrivals=$arrivals"),
-        check(loop,
+        Check(loop,
           "peak state bounded by the q_state_sizing peak formula at the batch horizon",
           peak <= horizonProj && peak > 0,
           s"observed=$peak projected_at_horizon=$horizonProj " +
             s"registered_30m=${proj("session_peak_users_30m")}"),
-        check(loop,
+        Check(loop,
           "timer eviction drained the real keys: only the flush session remains",
           fin <= 2, s"final_state_rows=$fin"))
     }
@@ -563,13 +481,13 @@ object ScaleStreamState {
                 (col("windowStart") / BucketMs).cast("long").as("b"),
                 col("totalCount").as("cnt")),
               buckets),
-            check(loop,
+            Check(loop,
               "non-zero rows == the registered tumbling_windows_total_10m projection",
               nzCount == proj("tumbling_windows_total_10m"),
               s"rows=$nzCount projected=${proj("tumbling_windows_total_10m")}"),
             zeroRowLaw(loop, rows.filter(col("totalCount") === 0), buckets),
             cadenceLaw(loop, rows),
-            check(loop,
+            Check(loop,
               "peak state bounded by the q_state_sizing event-peak formula at the batch horizon + one lastEmitted row per key",
               peak <= peakEventsAtHorizon(events, horizonMs) +
                 proj("keyed_state_keys") && peak > 0,
@@ -630,7 +548,7 @@ object ScaleStreamState {
           fold.select("userId", "isTimeout", "startTs", "endTs", "stageTs")) +:
         (cepStructuralLaws("B24_pattern_tws", streamed,
           CepPattern.size, CepWindowMs) ++ Seq(
-          check("B24_pattern_tws",
+          Check("B24_pattern_tws",
             "timer retirement drained every prefix: final state rows = 0",
             fin == 0, s"final_state_rows=$fin"),
           stateLaw("B24_pattern_tws", "keyed_state_keys",
@@ -671,15 +589,16 @@ object ScaleStreamState {
           java.nio.file.Paths.get(live).resolve(f.getName))
       }
       publish(files.take(splitAt))
-      val (w1, p1, peak1, _) = drive(spark, loop, live, start)
+      val p1 = drive(spark, live, start)
       publish(files.drop(splitAt))
-      val (w2, p2, peak2, fin2) = drive(spark, loop, live, start)
-      val r = LoopResult(loop, copies, arrivals, p1.size + p2.size, w1 + w2,
-        p1 ++ p2,
-        check(loop, "the restart really split the backlog: both phases ran batches",
-          p1.nonEmpty && p2.nonEmpty,
-          s"phase1_batches=${p1.size} phase2_batches=${p2.size}") +:
-          laws(math.max(peak1, peak2), fin2))
+      val p2 = drive(spark, live, start)
+      val perBatch = p1.perBatch ++ p2.perBatch
+      val r = LoopResult(loop, copies, arrivals, perBatch.size,
+        p1.wallSec + p2.wallSec, perBatch,
+        Check(loop, "the restart really split the backlog: both phases ran batches",
+          p1.perBatch.nonEmpty && p2.perBatch.nonEmpty,
+          s"phase1_batches=${p1.perBatch.size} phase2_batches=${p2.perBatch.size}") +:
+          laws(math.max(p1.peakStateRows, p2.peakStateRows), p2.finalStateRows))
       results += r
       onLoop(r)
     }
@@ -716,29 +635,28 @@ object ScaleStreamState {
       val (pacedArrivals, subLo, subHi) =
         writePacedBacklog(spark, scaledDir, backlog, 6 * HourMs, pacedSlice)
       val sink = s"$work/b19p_sessions"
-      val (wall, perBatch, peak, fin) = drive(spark, loop, backlog,
-        b19Start(sink, s"$work/ckpt_b19p"))
+      val replay = drive(spark, backlog, b19Start(sink, s"$work/ckpt_b19p"))
+      val (peak, fin) = (replay.peakStateRows, replay.finalStateRows)
       val subset = events.filter(col("ms") >= subLo && col("ms") < subHi)
       val conserved = spark.read.parquet(sink)
         .filter(col("userId") =!= FlushUser.toString)
         .agg(coalesce(sum("nEvents"), lit(0L))).head.getLong(0)
       val soundW = GapMs + 2 * pacedSlice + 60000L
       val subsetPeak = peakUsersAtHorizon(subset, soundW)
-      val r = LoopResult(loop, copies, pacedArrivals, perBatch.size, wall,
-        perBatch, Seq(
-          check(loop, "event conservation: session sizes sum to the paced arrivals",
-            conserved == pacedArrivals,
-            s"sum_n=$conserved arrivals=$pacedArrivals"),
-          check(loop,
-            "peak state under 10-min pacing bounded by the pair-peak at the eviction-lag-matched horizon (gap + 2 slices)",
-            peak <= subsetPeak && peak > 0,
-            s"observed=$peak span_pair_peak_at_${soundW}ms=$subsetPeak"),
-          check(loop,
-            "the registered whole-corpus session_peak_users_30m capacity number holds under paced ingest",
-            peak <= proj("session_peak_users_30m"),
-            s"observed=$peak registered=${proj("session_peak_users_30m")}"),
-          check(loop, "timer eviction drained the real keys",
-            fin <= 2, s"final_state_rows=$fin")))
+      val r = replay.result(loop, copies, pacedArrivals, Seq(
+        Check(loop, "event conservation: session sizes sum to the paced arrivals",
+          conserved == pacedArrivals,
+          s"sum_n=$conserved arrivals=$pacedArrivals"),
+        Check(loop,
+          "peak state under 10-min pacing bounded by the pair-peak at the eviction-lag-matched horizon (gap + 2 slices)",
+          peak <= subsetPeak && peak > 0,
+          s"observed=$peak span_pair_peak_at_${soundW}ms=$subsetPeak"),
+        Check(loop,
+          "the registered whole-corpus session_peak_users_30m capacity number holds under paced ingest",
+          peak <= proj("session_peak_users_30m"),
+          s"observed=$peak registered=${proj("session_peak_users_30m")}"),
+        Check(loop, "timer eviction drained the real keys",
+          fin <= 2, s"final_state_rows=$fin")))
       results += r
       onLoop(r)
     }
@@ -755,19 +673,9 @@ object ScaleStreamState {
       streamedDocs.agg(coalesce(sum(size(split(col("text"), " "))), lit(0)))
         .head.getLong(0) / 2).persist()
     try {
-      val schema = streamedDocs.schema
-      val listener = new StateListener
-      spark.streams.addListener(listener)
-      val t0 = System.nanoTime()
-      try {
-        val q = BudgetStream.budgetStream(
-          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(docBacklog),
-          budgets, s"$work/b28_state", s"$work/b28_verdicts",
-          s"$work/ckpt_b28", trigger = Trigger.AvailableNow())
-        q.awaitTermination()
-      } finally spark.streams.removeListener(listener)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val replay = drive(spark, docBacklog, src => BudgetStream.budgetStream(
+        src, budgets, s"$work/b28_state", s"$work/b28_verdicts",
+        s"$work/ckpt_b28", trigger = Trigger.AvailableNow()))
       val verdicts = spark.read.parquet(s"$work/b28_verdicts")
       val hconf = org.apache.spark.sql.graft.Bridge.newHadoopConf(spark)
       val base = new org.apache.hadoop.fs.Path(s"$work/b28_state")
@@ -778,12 +686,11 @@ object ScaleStreamState {
       val carried = spark.read.parquet(s"$work/b28_state/batch=$lastSnap")
       val laws = budgetLaws("B28_budget_stream", verdicts, budgets,
         carried, docArrivals) :+
-        check("B28_budget_stream",
+        Check("B28_budget_stream",
           "carried snapshot bounded by the source cardinality",
           carried.count() == verdicts.select("source").distinct().count(),
           s"snapshot_rows=${carried.count()} sources=${verdicts.select("source").distinct().count()}")
-      val r = LoopResult("B28_budget_stream", copies, docArrivals,
-        listener.rows.size, wall, listener.rows.toSeq, laws)
+      val r = replay.result("B28_budget_stream", copies, docArrivals, laws)
       results += r
       onLoop(r)
     } finally budgets.unpersist()

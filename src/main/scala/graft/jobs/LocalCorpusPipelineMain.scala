@@ -15,8 +15,9 @@ import graft.streaming.EmbStream
   *   `dedup_norm_exact` query) → BLOCKED embedding near-dup dedup
   *   through the B29 streaming store (bootstrap half indexes via
   *   `writeIndexBlocked`, the rest arrives as a checkpointed
-  *   file-source backlog through `dedupIndexedStreamBlocked`, the
-  *   production starter, through the BatchPar parallelism seam) →
+  *   file-source backlog written and read by ScaleStream's
+  *   `writeSlices`/`backlogStream` through `dedupIndexedStreamBlocked`,
+  *   the production starter, which spreads each one-file batch) →
   *   survivor corpus → curate (D16) → shard (D75)
   *
   * — batch flagships riding the streaming loops' index dirs. This is
@@ -95,29 +96,15 @@ object LocalCorpusPipelineMain {
     EmbStream.writeIndexBlocked(bootstrap, cent, band, vec)
     // backlog: three id-range slices, one file each, mtime-ordered
     val backlog = s"$dir/backlog"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(backlog))
     val width = math.max(1L, (bounds.getLong(1) + 1 - cut) / 3 + 1)
-    val mtBase = System.currentTimeMillis() - 10000L
-    (0 until 3).foreach { i =>
+    ScaleStream.writeSlices(backlog, (0 until 3).map { i =>
       val lo = cut + i * width
-      val tmp = s"$backlog/_tmp"
       streamed.filter(col("vec_id") >= lo && col("vec_id") < lo + width)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      require(part.length == 1, s"expected one part file, got ${part.length}")
-      val target = java.nio.file.Paths.get(f"$backlog/slice_$i%02d.parquet")
-      java.nio.file.Files.move(part(0).toPath, target)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(mtBase + i * 1000L))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    })
     val q = EmbStream.dedupIndexedStreamBlocked(
-      spark.readStream.schema(streamed.schema)
-        .option("maxFilesPerTrigger", 1).parquet(backlog),
+      ScaleStream.backlogStream(spark, backlog),
       cent, band, vec, s"$dir/emb_verdicts", s"$dir/ckpt_emb",
-      trigger = Trigger.AvailableNow(),
-      batchPartitions = Some(spark.sparkContext.defaultParallelism))
+      trigger = Trigger.AvailableNow())
     q.awaitTermination()
     val embVerdicts = spark.read.parquet(s"$dir/emb_verdicts").persist()
     val embSurvivors = embVerdicts.filter(col("partner_id").isNull).count()

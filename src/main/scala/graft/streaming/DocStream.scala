@@ -138,14 +138,13 @@ object DocStream {
     */
   def processBatch(batch: DataFrame, indexDir: String,
       verdictsDir: String, batchId: Long,
-      seam: String => Unit = _ => (),
-      batchPartitions: Option[Int] = None): Unit = {
+      seam: String => Unit = _ => ()): Unit = {
     val spark = batch.sparkSession
     graft.sources.Layout.requireNoMaintenance(spark, indexDir)
     // [[BatchPar]]: file-source batches arrive one-partition-per-file;
     // the minhash below is the dominant per-batch CPU and would
     // serialize onto one core (the measured r15 one-core incident)
-    val cached = BatchPar(batch, batchPartitions).persist()
+    val cached = BatchPar(batch).persist()
     try {
       IdWatermark.checkAndAdvance(cached, "doc_id", indexDir, batchId, "docstream")
       val index = spark.read.parquet(indexDir)
@@ -170,25 +169,16 @@ object DocStream {
   }
 
   /** Start the streaming dedup loop. `docs` is a streaming DataFrame
-    * of (doc_id LONG, text STRING).
-    *
-    * `batchPartitions`: set for FILE-source runs (backfills,
-    * rehearsals, local Kafka stand-ins) — a one-file-per-trigger file
-    * source delivers each micro-batch as ONE scan partition and the
-    * whole batch's minhash work serializes onto a single core
-    * (measured r15 at the 100x tier: ~20 min/batch on 32 cores).
-    * Leave the default `None` on Kafka: topic partitions give the
-    * parallelism natively and the extra exchange would be pure cost.
+    * of (doc_id LONG, text STRING); each batch is spread by
+    * [[BatchPar]] before the minhash.
     */
   def dedupIndexedStream(
       docs: DataFrame, indexDir: String, verdictsDir: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      batchPartitions: Option[Int] = None): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, indexDir, verdictsDir, batchId,
-          batchPartitions = batchPartitions)
+        processBatch(batch, indexDir, verdictsDir, batchId)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -149,8 +149,7 @@ object EmbStream {
   def processBatch(batch: DataFrame, bandDir: String, vecDir: String,
       verdictsDir: String, batchId: Long,
       tau: Double = Similarity.nearDupTau,
-      seam: String => Unit = _ => (),
-      batchPartitions: Option[Int] = None): Unit = {
+      seam: String => Unit = _ => ()): Unit = {
     val spark = batch.sparkSession
     // fence EVERY directory this batch appends to — compact(vecDir)
     // locks at <vecDir>.maintenance, which a bandDir-only probe would
@@ -161,7 +160,7 @@ object EmbStream {
     graft.sources.Layout.requireNoMaintenance(spark, vecDir)
     // [[BatchPar]]: the quantize below is the dominant per-batch CPU —
     // a one-partition file-source batch would run it on one core
-    val q = Similarity.quantizeCols(BatchPar(batch, batchPartitions))
+    val q = Similarity.quantizeCols(BatchPar(batch))
       .persist()
     try {
       IdWatermark.checkAndAdvance(q, "vec_id", bandDir, batchId, "embstream")
@@ -644,8 +643,7 @@ object EmbStream {
   def processBatchBlocked(batch: DataFrame, centDir: String,
       bandDir: String, vecDir: String, verdictsDir: String, batchId: Long,
       tau: Double = Similarity.nearDupTau,
-      seam: String => Unit = _ => (),
-      batchPartitions: Option[Int] = None): Unit = {
+      seam: String => Unit = _ => ()): Unit = {
     val spark = batch.sparkSession
     // fence both append targets — see the processBatch comment on why
     // a bandDir-only probe misses compact(vecDir)'s lock
@@ -654,7 +652,7 @@ object EmbStream {
     requireConsistentEpochs(spark, centDir, bandDir)
     val cb = loadCodebook(spark, centDir)
     // [[BatchPar]]: same one-core file-source hazard as processBatch
-    val q = Similarity.quantizeCols(BatchPar(batch, batchPartitions))
+    val q = Similarity.quantizeCols(BatchPar(batch))
       .persist()
     // assignment computed ONCE per batch and shared by the dedup and
     // the survivor-append paths (r13 review: the survivors are a
@@ -689,45 +687,35 @@ object EmbStream {
   }
 
   /** Start the BLOCKED streaming near-dup loop (bootstrap with
-    * [[writeIndexBlocked]] first — the codebook must exist).
-    *
-    * `batchPartitions`: set for FILE-source runs — see [[BatchPar]]
-    * (a one-file-per-trigger batch arrives as one scan partition and
-    * the quantize serializes onto one core; measured r15 at 100x:
-    * ~20 min/batch on 32 cores). Leave `None` on Kafka — topic
-    * partitions parallelize the batch natively.
+    * [[writeIndexBlocked]] first — the codebook must exist); each
+    * batch is spread by [[BatchPar]] before the quantize.
     */
   def dedupIndexedStreamBlocked(
       embs: DataFrame, centDir: String, bandDir: String, vecDir: String,
       verdictsDir: String, checkpoint: String,
       tau: Double = Similarity.nearDupTau,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      batchPartitions: Option[Int] = None): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     embs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatchBlocked(batch, centDir, bandDir, vecDir, verdictsDir,
-          batchId, tau, batchPartitions = batchPartitions)
+          batchId, tau)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
 
   /** Start the streaming near-dup loop. `embs` is a streaming
-    * DataFrame of (vec_id LONG, embedding ARRAY<numeric>).
-    *
-    * `batchPartitions`: file-source parallelism seam — see
-    * [[dedupIndexedStreamBlocked]] and [[BatchPar]].
+    * DataFrame of (vec_id LONG, embedding ARRAY<numeric>); each batch
+    * is spread by [[BatchPar]] before the quantize.
     */
   def dedupIndexedStream(
       embs: DataFrame, bandDir: String, vecDir: String,
       verdictsDir: String, checkpoint: String,
       tau: Double = Similarity.nearDupTau,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      batchPartitions: Option[Int] = None): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     embs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, bandDir, vecDir, verdictsDir, batchId, tau,
-          batchPartitions = batchPartitions)
+        processBatch(batch, bandDir, vecDir, verdictsDir, batchId, tau)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -635,19 +635,14 @@ object EventStream {
       outDir: String,
       checkpoint: String,
       maxFilesPerTrigger: Int = 4,
-      trigger: Trigger = Trigger.AvailableNow(),
-      batchPartitions: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    // [[BatchPar]]: this starter IS a file-source deployment — each
-    // micro-batch arrives as maxFilesPerTrigger scan partitions (often
-    // 1), so an expensive `transform` serializes onto that many cores
-    // (the measured r15 one-core incident). Set batchPartitions to
-    // spread the batch; stateful transforms downstream re-shuffle by
-    // their grouping key regardless, so the seam never changes results.
-    val src = BatchPar(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(srcDir),
-      batchPartitions)
+      trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+    // the source is not spread (no [[BatchPar]]): each micro-batch
+    // arrives as up to maxFilesPerTrigger scan partitions, and the
+    // stateful transforms this starter runs re-shuffle by their
+    // grouping key before their per-key work
+    val src = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(srcDir)
     transform(src).writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the streaming scale rehearsal ([[ScaleStream]]) end-to-end
@@ -36,6 +37,33 @@ class ScaleStreamSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(work))
     }
+  }
+
+  test("writeSlices lays out one file per slice and drive replays slice k as batch k") {
+    import spark.implicits._
+    val work = TestSpark.tempDir("graft_slices").toString
+    val backlog = s"$work/backlog"
+    // three partitions per frame: the writer must still emit one file
+    val frames = Seq(1 to 5, 6 to 7, 8 to 15)
+      .map(r => r.map(_.toLong).toDF("id").repartition(3))
+    val counts = ScaleStream.writeSlices(backlog, frames)
+    val now = System.currentTimeMillis()
+    assert(counts == Seq(5L, 2L, 8L))
+    val files = new java.io.File(backlog).listFiles().sortBy(_.getName).toSeq
+    assert(files.map(_.getName) ==
+      Seq("slice_0000.parquet", "slice_0001.parquet", "slice_0002.parquet"),
+      "exactly one part file per slice, nothing else left behind")
+    val mtimes = files.map(_.lastModified)
+    assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+      s"mtimes must rise strictly: $mtimes")
+    assert(mtimes.forall(_ <= now), s"mtimes must lie in the past: $mtimes")
+    val replay = ScaleStream.drive(spark, backlog, src =>
+      src.writeStream.format("noop")
+        .option("checkpointLocation", s"$work/ckpt")
+        .trigger(Trigger.AvailableNow()).start())
+    assert(replay.perBatch.map { case (id, n, _) => (id, n) } ==
+      counts.zipWithIndex.map { case (n, k) => (k.toLong, n) },
+      s"slice k must arrive as batch k: ${replay.perBatch}")
   }
 
   test("stream laws reject lost verdicts, cycles, and cross-replica partners (negative)") {
